@@ -42,8 +42,4 @@ object Tables {
       else s"${f.getName}:${f.length}:${f.lastModified}"
     sig(new java.io.File(dir, s"$name.parquet"))
   }
-
-  /** Register all tables as temp views so `spark.sql` parity queries work. */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    all.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
 }

@@ -53,7 +53,10 @@ object ReferenceQueries {
       .join(broadcast(storms), Seq("nhc_id"))
       .groupBy("name", "model", "nhc_number")
       .agg(count(lit(1)).as("n_tracks"))
-      .orderBy(col("nhc_number").asc, col("n_tracks").desc, col("model").asc)
+      // name last: same-numbered storms of different seasons (AL01 of
+      // 2022 and of 2023) tie on the first three keys
+      .orderBy(col("nhc_number").asc, col("n_tracks").desc, col("model").asc,
+        col("name").asc)
       .select("name", "model", "n_tracks")
   }
 

@@ -60,17 +60,4 @@ object StormDataset {
     store.read("storms", Schemas.storms).filter(col("nhc_id") === nhcId)
       .join(picked.drop("start_date", "run_id"), Seq("nhc_id"))
   }
-
-  /** S10 — JSON document export of the snapshot (invest.py:175-209),
-    * canonical form: keys sorted, datetime pre-formatted, nulls kept —
-    * so any two engines producing the doc agree byte-for-byte. */
-  def investJson(store: Store, nhcId: String): DataFrame =
-    investSnapshot(store, nhcId, None)
-      .select(col("nhc_id"),
-        to_json(struct(
-            date_format(col("datetime_utc"), "yyyy-MM-dd HH:mm:ss")
-              .as("datetime_utc"),
-            col("intensity_kts"), col("latitude"), col("longitude"),
-            col("mslp_mb"), col("name"), col("season"), col("status")),
-          java.util.Map.of("ignoreNullFields", "false")).as("doc"))
 }

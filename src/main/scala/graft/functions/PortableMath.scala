@@ -91,10 +91,6 @@ object PortableMath {
        |    CAST(e AS BIGINT) * 1048576 + acc AS lmicro
        |  FROM ${out}_steps WHERE i = 20)""".stripMargin
 
-  /** The DuckDB twin of [[lnNano]], as an expression over `lmicro`. */
-  def sqlLnNano(lmicro: String): String =
-    s"(($lmicro) * 693147181) // 1048576"
-
   /** 2^Ai as BIGINT for an integer-column exponent (0 <= Ai <= 62). */
   def pow2(e: Column): Column = shiftLeft(lit(1L), e)
 

@@ -221,21 +221,29 @@ object AtcfParser {
 
   /** Forecast steps from an a-deck: one row per (init, model, hour) with
     * the radial pivot — set-based per-TAU upsert loop
-    * (tcdb/etl/atcf_forecasts.py:119-131, atcf.py:388-415). */
+    * (tcdb/etl/atcf_forecasts.py:119-131, atcf.py:388-415).
+    *
+    * Rows group by the VALIDATED hour, the step's natural key, so every
+    * negative tau (CARQ carries -12 and -6) lands in the one null-hour
+    * step. Among the taus that share an hour the largest raw tau wins —
+    * the reference upserts per tau in ascending order, last write wins —
+    * and an unparseable tau ranks below every real one; within the
+    * winning tau the smallest radius row is picked, as for every hour. */
   def forecastSteps(adeck: DataFrame): DataFrame = {
+    val rowKey = struct(
+      coalesce(-col("tau").cast("long"), lit(Long.MaxValue)).as("t"),
+      coalesce(col("rad"), lit(0.0)).as("r"))
     val first = (c: String) =>
-      pickByKey(coalesce(col("rad"), lit(0.0)), col(c), lit(0.0),
-        largest = false).as(c)
+      pickByKey(rowKey, col(c), lit(0.0), largest = false).as(c)
     fileMeta(adeck)
       .groupBy(col("file"), col("file_basin").as("region"),
         col("file_nhc_number").as("nhc_number"),
         col("file_season").as("season"),
         col("datetime").as("datetime_utc"), col("tech").as("model"),
-        col("tau").as("hour"))
+        Validators.validateForecastStep(col("tau")).cast("int").as("hour"))
       .agg(first("lat"), first("lon"), first("vmax"), first("mslp"))
       .select(col("file"), col("region"), col("nhc_number"), col("season"),
-        col("datetime_utc"), col("model"),
-        Validators.validateForecastStep(col("hour")).cast("int").as("hour"),
+        col("datetime_utc"), col("model"), col("hour"),
         Validators.validateLatitude(col("lat")).as("latitude"),
         Validators.validateLongitude(col("lon")).as("longitude"),
         Validators.validateVelocity(col("vmax")).as("intensity_kts"),

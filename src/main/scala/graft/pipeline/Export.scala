@@ -1,7 +1,6 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
-import org.apache.spark.sql.functions._
 
 /** Golden-output CSV export — the reference's `db/sql_export.py:10-28`
   * workflow: mode "init" writes headerless rows with `\N` nulls
@@ -21,18 +20,5 @@ object Export {
         .csv(path)
     case other =>
       throw new IllegalArgumentException(s"export mode: $other")
-  }
-
-  /** Export all store tables (the sql_export "all five fact tables"). */
-  def exportStore(store: Store, outDir: String, mode: String): Unit = {
-    import graft.schema.Schemas
-    Seq(
-      "storms" -> Schemas.storms,
-      "observations" -> Schemas.observations,
-      "forecasts" -> Schemas.forecasts,
-      "tracks" -> Schemas.tracks,
-      "steps" -> Schemas.steps).foreach { case (t, schema) =>
-      csv(store.read(t, schema), s"$outDir/$t", mode)
-    }
   }
 }

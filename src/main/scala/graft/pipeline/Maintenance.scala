@@ -26,7 +26,8 @@ object Maintenance {
               lit(now) - expr(s"interval $hours hours"), "Archive")
           .otherwise(col("status")))
       .drop("last_obs")
-    store.write("storms", updated.transform(graft.pipeline.Checkpoints.stable))
+    // no seam: the staged write reads the table before replacing it
+    store.write("storms", updated)
   }
 
   /** routines.py:33-63 — delete invests (nhc_number >= 90) whose last

@@ -32,7 +32,9 @@ object Pipelines {
     val rid = runId("STORMS", now)
     val bdeck = AtcfParser.parseBDeck(AtcfParser.readDeckLines(spark, landing))
 
-    val summaries = AtcfParser.stormSummaries(bdeck)
+    // one row per landed file: materialized once (on the driver while it
+    // is tiny) and shared by the resolver and the observations' file keys
+    val summaries = Checkpoints.local(AtcfParser.stormSummaries(bdeck))
     val existing = store.read("storms", Schemas.storms)
     val storms = StormResolver.resolve(existing, summaries, now, rid)
       .withColumn("last_update", lit(now))
@@ -82,13 +84,15 @@ object Pipelines {
       case None => adeck
     }
 
-    val steps = AtcfParser.forecastSteps(recent)
+    // materialized once for the three upserts below, which would each
+    // re-parse the a-deck and re-join storms otherwise
+    val steps = Checkpoints.local(AtcfParser.forecastSteps(recent)
       // storm inference from the FILE name; unknown storms skipped
       // (tcdb/models/database.py:26-66, adeck.py:155-160)
       .withColumn("nhc_id", graft.functions.Atcf.nhcId(
         col("region"), col("nhc_number"), col("season")))
       .join(store.read("storms", Schemas.storms).select("nhc_id"),
-        Seq("nhc_id"), "left_semi")
+        Seq("nhc_id"), "left_semi"))
 
     val org = when(lower(col("region")).isin("al", "ep", "cp"), "NHC")
       .otherwise("JTWC")

@@ -7,6 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.Geo
+import graft.pipeline.Checkpoints
 
 /** Batch entity resolution for storms — the set-based rewrite of the
   * reference's sequential per-file state machine
@@ -21,7 +22,10 @@ import graft.functions.Geo
   * nhc_id, the closest-storm rule is a window rank over a great-circle
   * distance, and annual ids are assigned with max+row_number per
   * (season, region) — all shuffle-on-key, no driver loops, skew-safe
-  * under AQE at any storm count.
+  * under AQE at any storm count. Each phase ends at a seam whose kind is
+  * decided once per batch by size (see [[resolve]]): a driver-held local
+  * relation while the store and the batch are tiny, as in a 6-hourly
+  * cron cycle, and an eager local checkpoint at scale.
   */
 object StormResolver {
 
@@ -56,26 +60,37 @@ object StormResolver {
   def resolve(existingRaw: DataFrame, summaries: DataFrame, now: Timestamp,
       runId: String): DataFrame = {
     // audit columns are re-stamped by the caller
-    val existing = existingRaw.drop("last_update")
+    val existingIn = existingRaw.drop("last_update")
+
+    // Each phase's output is referenced several times by the next phase,
+    // so every phase ends at a seam: without one the logical plan tree
+    // duplicates multiplicatively and Catalyst spends minutes OPTIMIZING
+    // a one-row batch. The seam kind is decided once, here, from the two
+    // inputs: every phase outputs at most |existing| + |summaries| rows
+    // of the storms shape (an incoming row updates, claims or adds one
+    // storm), so when both inputs fit the broadcast threshold together,
+    // every phase does too. Then the store rows and each phase's output
+    // are held on the driver (Checkpoints.toLocal), and the joins between
+    // them broadcast without a job. The joined frames are not gated on
+    // their own estimates: non-CBO join estimates are products. At scale,
+    // or on an input of unknown size, the seams are eager checkpoints.
+    val onDriver = Checkpoints.fitsLocal(existingIn, summaries)
+    val seam: DataFrame => DataFrame =
+      if (onDriver) Checkpoints.toLocal else Checkpoints.stable
+    val existing = if (onDriver) seam(existingIn) else existingIn
 
     // status stamp: Active if observed within 16 h (process_storms.py:205-208)
-    // localCheckpoint = lineage barrier: each phase's output is referenced
-    // several times by the next phase; without truncation the logical
-    // plan tree duplicates multiplicatively and Catalyst spends minutes
-    // OPTIMIZING a one-row batch. The storms table is small at any data
-    // scale (one row per storm), so eager materialization is cheap.
-    val stamped = summaries.withColumn("status",
+    val stamped = seam(summaries.withColumn("status",
       when(unix_timestamp(lit(now)) - unix_timestamp(col("end_date")) <= 16 * 3600,
-        "Active").otherwise("Archive"))
-      .transform(graft.pipeline.Checkpoints.stable)
+        "Active").otherwise("Archive")))
 
     val named   = stamped.filter(col("nhc_number") < 90)
     val invests = stamped.filter(col("nhc_number") >= 90)
       // stale invests (no obs for 24 h) are ignored (process_storms.py:79-81)
       .filter(unix_timestamp(lit(now)) - unix_timestamp(col("end_date")) < 24 * 3600)
 
-    val postNamed = resolveNamed(existing, named, runId).transform(graft.pipeline.Checkpoints.stable)
-    val postBoth  = resolveInvests(postNamed, invests, runId).transform(graft.pipeline.Checkpoints.stable)
+    val postNamed = seam(resolveNamed(existing, named, runId))
+    val postBoth  = seam(resolveInvests(postNamed, invests, runId))
     assignAnnualIds(postBoth)
   }
 

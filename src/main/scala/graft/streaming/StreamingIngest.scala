@@ -89,13 +89,6 @@ object StreamingIngest {
         col("nhc_id"))
       .agg(count(lit(1)).as("n_obs"), max("intensity_kts").as("peak_kts"))
 
-  /** T3 — stateful Active→Archive transition as a streaming aggregation:
-    * latest observation per storm, status derived on read. */
-  def statusStream(obs: DataFrame): DataFrame =
-    obs.withWatermark("datetime_utc", "48 hours")
-      .groupBy(col("nhc_id"))
-      .agg(max("datetime_utc").as("last_obs"))
-
   /** S13 streaming — content-hash dedup across micro-batches: drop a row
     * if its payload hash was already seen within the watermark horizon
     * (state TTL bounds the hash set; the batch path's byte-identical

@@ -61,6 +61,25 @@ class ReferenceQueriesSpec extends AnyFunSuite {
       == Seq(("HU-Ian", "HWRF"), ("HU-Ian", "OFCL")))
   }
 
+  test("storm_track_counts_by_model orders same-numbered storms of two seasons by name") {
+    // AL01 of 2022 and of 2023 tie on (nhc_number, n_tracks, model)
+    val landingB = Files.createTempDirectory("rq2_b")
+    val landingA = Files.createTempDirectory("rq2_a")
+    Seq("2022" -> "ZETA", "2023" -> "ALEX").foreach { case (season, name) =>
+      Files.write(landingB.resolve(s"bal01$season.dat"),
+        Fixtures.bdeck(s"${season}092800", 34, snum = 1, name = name).getBytes)
+      Files.write(landingA.resolve(s"aal01$season.dat"),
+        Fixtures.adeck(s"${season}092800", "OFCL", 0, 34).getBytes)
+    }
+    val s = new Store(spark, Files.createTempDirectory("rq2_store").toString)
+    Pipelines.runBdeck(spark, landingB.toString, s, now)
+    Pipelines.runAdeck(spark, landingA.toString, s, now, Seq("OFCL"),
+      recencyHours = None)
+    val out = ReferenceQueries.stormTrackCountsByModel(spark, s, "AL").collect()
+    assert(out.map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq
+      == Seq(("HU-Alex", "OFCL", 1L), ("HU-Zeta", "OFCL", 1L)))
+  }
+
   test("track extraction: per-step rows filtered by init and model") {
     val out = ReferenceQueries.trackExtraction(spark, store, "AL092022",
       init = Some(Timestamp.valueOf("2022-09-28 12:00:00")),

@@ -106,6 +106,25 @@ class AtcfParserSpec extends AnyFunSuite {
     assert(r.getAs[Int]("nhc_number") == 9)
   }
 
+  test("forecastSteps folds negative taus into one null-hour step; the largest tau wins") {
+    // CARQ carries two negative taus per init; both validate to a null
+    // hour, so they share one natural key and must land as one step
+    val lines = Seq(
+      adeck("2022092800", "CARQ", -12, 34, lat = "250N"),
+      adeck("2022092800", "CARQ", -12, 50, lat = "251N"),
+      adeck("2022092800", "CARQ", -6, 50, lat = "262N"),
+      adeck("2022092800", "CARQ", -6, 34, lat = "261N"),
+      adeck("2022092800", "CARQ", 0, 34, lat = "270N"))
+    val steps = AtcfParser.forecastSteps(
+      AtcfParser.parseADeck(bdeckDf("aal092022.dat", lines)))
+      .orderBy(col("hour").asc_nulls_first).collect()
+    assert(steps.map(r => Option(r.getAs[Integer]("hour")).map(_.intValue)).toSeq
+      == Seq(None, Some(0)))
+    // tau -6 beats -12, and its 34-kt row beats its 50-kt row
+    assert(steps(0).getAs[Double]("latitude") == 26.1)
+    assert(steps(1).getAs[Double]("latitude") == 27.0)
+  }
+
   test("rejectedLines surfaces dropped ragged rows (atcf.py:245-246)") {
     val lines = bdeckDf("bal092022.dat",
       Seq(bdeck("2022092800", 34), "too,short,row", "also short"))

@@ -1,5 +1,7 @@
 package graft.pipeline
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -32,6 +34,23 @@ class CheckpointsSpec extends AnyFunSuite {
     assert(new java.io.File(new java.net.URI(ckDir.get).getPath)
       .listFiles() != null)
     assert(relRows == local.collect().map(_.getInt(0)).sorted.toSeq)
+  }
+
+  test("local holds a frame that fits on the driver and checkpoints it " +
+      "when the broadcast threshold is -1; rows identical either way") {
+    def onDriver(df: DataFrame) = df.queryExecution.analyzed.collectLeaves()
+      .forall(_.isInstanceOf[LocalRelation])
+    val df = spark.range(100).toDF("x")
+    val held = Checkpoints.local(df)
+    assert(onDriver(held))
+    val checkpointed = TestSpark.withConf(
+        "spark.sql.autoBroadcastJoinThreshold", "-1") {
+      val c = Checkpoints.local(df)
+      assert(!onDriver(c))
+      c.collect().map(_.getLong(0)).toSeq
+    }
+    assert(held.collect().map(_.getLong(0)).toSeq.sorted == checkpointed.sorted)
+    assert(checkpointed.sorted == (0L until 100L))
   }
 
   test("an operator built on checkpoint seams returns identical results " +

@@ -114,6 +114,53 @@ class PipelineSpec extends AnyFunSuite {
     assert(store.read("steps", Schemas.steps).count() == 3)
   }
 
+  test("a cron cycle writes the same five tables with driver-held and " +
+      "checkpointed seams") {
+    val landingB = tmpDir("cycle_b")
+    val landingA = tmpDir("cycle_a")
+    writeLanding(landingB, "bal092022.dat", Seq(
+      Fixtures.bdeck("2022092800", 34), Fixtures.bdeck("2022092800", 50),
+      Fixtures.bdeck("2022092806", 34, vmax = 110, mslp = 940)))
+    writeLanding(landingB, "bal912022.dat", Seq(
+      Fixtures.bdeck("2022092806", 34, snum = 91, name = "INVEST",
+        lat = "150N", lon = "400W")))
+    writeLanding(landingA, "aal092022.dat", Seq(
+      Fixtures.adeck("2022092806", "CARQ", -12, 34),
+      Fixtures.adeck("2022092806", "CARQ", -6, 34),
+      Fixtures.adeck("2022092806", "CARQ", 0, 34),
+      Fixtures.adeck("2022092812", "OFCL", 0, 34),
+      Fixtures.adeck("2022092812", "OFCL", 12, 34),
+      Fixtures.adeck("2022092812", "OFCL", 12, 50)))
+    val tables = Seq("storms" -> Schemas.storms,
+      "observations" -> Schemas.observations, "forecasts" -> Schemas.forecasts,
+      "tracks" -> Schemas.tracks, "steps" -> Schemas.steps)
+
+    // the first cycle creates the tables; the second runs against them
+    def cycles(): (Seq[Seq[String]], Int) = {
+      val store = new Store(spark, tmpDir("cycle_store").toString)
+      def cycle(): Unit = {
+        Pipelines.runBdeck(spark, landingB.toString, store, now)
+        Pipelines.runAdeck(spark, landingA.toString, store, now,
+          allowedModels = Seq("CARQ", "OFCL"))
+        Maintenance.archiveStale(store, now)
+      }
+      cycle()
+      val (_, jobs) = graft.JobCount(spark)(cycle())
+      (tables.map { case (t, schema) =>
+        store.read(t, schema).collect().map(_.toString).sorted.toSeq }, jobs)
+    }
+    val (held, heldJobs) = cycles()
+    val (checkpointed, checkpointedJobs) = TestSpark.withConf(
+      "spark.sql.autoBroadcastJoinThreshold", "-1")(cycles())
+    tables.map(_._1).zip(held.zip(checkpointed)).foreach { case (t, (h, c)) =>
+      assert(h == c, s"table $t differs between the seam regimes")
+    }
+    assert(heldJobs < checkpointedJobs,
+      s"driver-held cycle ran $heldJobs jobs, checkpointed $checkpointedJobs")
+    // CARQ's -12 and -6 share the null hour: one step, not two
+    assert(held(4).size == 4, held(4).mkString("\n"))
+  }
+
   test("store layout gives partition pruning on (region, season) predicates") {
     val storeDir = tmpDir("store_prune")
     val store = new Store(spark, storeDir.toString)
