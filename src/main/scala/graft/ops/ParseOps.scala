@@ -108,14 +108,17 @@ object ParseOps {
 
   /** a-deck: the 17 positional fields (tech = forecast model, tau = lead
     * hour, some negative → validator-nulled) plus 3 trailing extras so the
-    * line clears the 18-field ragged gate, as real a-decks do. */
+    * line clears the 18-field ragged gate, as real a-decks do. A -12 init
+    * carries its 64 kt radius at -6, so one (file, init, model) has two
+    * negative taus, as CARQ's -12 and -6 lines do in a real a-deck. */
   private def adeckFields: Seq[F] = {
     val b = bdeckFields
     val tech = F("tech",
       caseOf((ok % 4).cast("int"), Seq(0 -> " AVNO", 1 -> "GFSO", 2 -> "HWRF"), "OFCL"),
       "CASE CAST(ok % 4 AS INT) WHEN 0 THEN ' AVNO' WHEN 1 THEN 'GFSO' WHEN 2 THEN 'HWRF' ELSE 'OFCL' END")
-    val tau = F("tau", okS((ok % 10) * 12 - 12),
-      "CAST((ok % 10) * 12 - 12 AS VARCHAR)")
+    val tau = F("tau",
+      when(ok % 10 === 0 && rad === 64, "-6").otherwise(okS((ok % 10) * 12 - 12)),
+      "CASE WHEN ok % 10 = 0 AND rad = 64 THEN '-6' ELSE CAST((ok % 10) * 12 - 12 AS VARCHAR) END")
     b.take(17).map {
       case f if f.name == "tech" => tech
       case f if f.name == "tau" => tau
@@ -412,23 +415,26 @@ object ParseOps {
     AtcfParser.forecastSteps(AtcfParser.parseADeck(adeckLines(spark, dir)))
 
   /** Shared a-deck CTE chain: raw lines → parse → per-(file, init, model,
-    * tau) rows with validators applied — used by both q_forecast_steps
-    * and q_ref_track_extraction so the validator replay lives ONCE. */
+    * validated hour) rows with validators applied — used by both
+    * q_forecast_steps and q_ref_track_extraction so the validator replay
+    * lives ONCE. Negative taus share the null hour; the largest raw tau
+    * wins, then the smallest radius. */
   private[ops] val adeckStepsCte = {
+    val hour = "CASE WHEN tau >= 0 THEN tau END"
     val f34 = Seq("lat", "lon", "vmax", "mslp")
-      .map(c => pickSql(Seq("coalesce(rad, 0)"), c, "0", largest = false) +
+      .map(c => pickSql(Seq("coalesce(-CAST(tau AS BIGINT), 9223372036854775807)",
+        "coalesce(rad, 0)"), c, "0", largest = false) +
         s" AS $c").mkString(",\n  ")
     s"""$adeckOraclePrefix,
        |o1 AS (SELECT file,
        |  upper(substr(file, 2, 2)) AS region,
        |  CAST(substr(file, 4, 2) AS INT) AS nhc_number,
        |  CAST(regexp_extract(file, '^.(..)(..)([0-9]{4})', 3) AS INT) AS season,
-       |  datetime, tech, tau,
+       |  datetime, tech, $hour AS hour,
        |  $f34
-       |  FROM parsed GROUP BY file, datetime, tech, tau),
+       |  FROM parsed GROUP BY file, datetime, tech, $hour),
        |vsteps AS (SELECT file, region, nhc_number, season,
-       |  datetime AS datetime_utc, tech AS model,
-       |  CASE WHEN tau >= 0 THEN tau END AS hour,
+       |  datetime AS datetime_utc, tech AS model, hour,
        |  CASE WHEN lat BETWEEN -90 AND 90 THEN lat END AS latitude,
        |  CASE WHEN lon BETWEEN -180 AND 180 THEN lon END AS longitude,
        |  CASE WHEN vmax BETWEEN 0 AND 250 THEN vmax END AS intensity_kts,

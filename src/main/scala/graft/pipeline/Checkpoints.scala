@@ -24,15 +24,15 @@ import org.apache.spark.sql.{DataFrame, Dataset}
   * like-for-like with previous rounds, and reliable checkpoints pay a
   * real write+read of the materialized frame.
   *
-  * [[local]] is the size-gated seam beside [[stable]]: a frame that Spark
-  * estimates, before execution, at no more than
-  * `spark.sql.autoBroadcastJoinThreshold` is collected once and held as a
-  * driver-side `LocalRelation`. That spends one collect instead of a
-  * checkpoint's jobs, and downstream joins broadcast it without a job.
-  * A driver-held relation is lost only with the driver, which loses the
-  * whole application anyway, so `graft.checkpoint.reliable` does not
-  * apply to it. Frames that do not fit, or any frame when the threshold
-  * is -1, take [[stable]].
+  * [[toLocal]] is the driver-held seam beside [[stable]]: the frame is
+  * collected once and held as a `LocalRelation`. That spends one collect
+  * instead of a checkpoint's jobs, and downstream joins broadcast it
+  * without a job. It suits frames with a row bound that stays small at
+  * any data scale (the storm resolver's, one row per storm or landed
+  * file); [[localIfFits]] gates a frame without such a bound on Spark's
+  * pre-execution size estimate. A driver-held relation is lost only with
+  * the driver, which loses the whole application anyway, so
+  * `graft.checkpoint.reliable` does not apply to it.
   */
 object Checkpoints {
   private def reliable: Boolean =
@@ -49,19 +49,18 @@ object Checkpoints {
       df.checkpoint()
     }
 
-  /** Materialize `df` on the driver when it fits, else through [[stable]]. */
-  def local(df: DataFrame): DataFrame =
-    if (fitsLocal(df)) toLocal(df) else stable(df)
-
-  /** Whether Spark's pre-execution size estimates of `dfs` (file bytes and
-    * plan statistics, the figure its broadcast planning reads) sum to at
-    * most `spark.sql.autoBroadcastJoinThreshold`; never when that is -1.
-    * Non-CBO estimates of joins are products of their inputs, so callers
-    * gate a pipeline on its inputs rather than on its joined frames. */
-  def fitsLocal(dfs: DataFrame*): Boolean = {
-    val threshold = dfs.head.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-    threshold >= 0 &&
-      dfs.map(_.queryExecution.optimizedPlan.stats.sizeInBytes).sum <= threshold
+  /** `df` held on the driver ([[toLocal]]) when Spark's pre-execution
+    * size estimate of it (file bytes and plan statistics, the figure its
+    * broadcast planning reads) is at most
+    * `spark.sql.autoBroadcastJoinThreshold`, else `df` itself,
+    * unmaterialized; never held when the threshold is -1. Non-CBO
+    * estimates of joins are products of their inputs, so gate a frame
+    * whose top join is a semi join or none. */
+  def localIfFits(df: DataFrame): DataFrame = {
+    val threshold = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val fits = threshold >= 0 &&
+      df.queryExecution.optimizedPlan.stats.sizeInBytes <= threshold
+    if (fits) toLocal(df) else df
   }
 
   /** Collect `df` once and return it as a `LocalRelation`. */

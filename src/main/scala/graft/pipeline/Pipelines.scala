@@ -32,9 +32,9 @@ object Pipelines {
     val rid = runId("STORMS", now)
     val bdeck = AtcfParser.parseBDeck(AtcfParser.readDeckLines(spark, landing))
 
-    // one row per landed file: materialized once (on the driver while it
-    // is tiny) and shared by the resolver and the observations' file keys
-    val summaries = Checkpoints.local(AtcfParser.stormSummaries(bdeck))
+    // one row per landed file: held on the driver once and shared by the
+    // resolver and the observations' file keys
+    val summaries = Checkpoints.toLocal(AtcfParser.stormSummaries(bdeck))
     val existing = store.read("storms", Schemas.storms)
     val storms = StormResolver.resolve(existing, summaries, now, rid)
       .withColumn("last_update", lit(now))
@@ -84,9 +84,10 @@ object Pipelines {
       case None => adeck
     }
 
-    // materialized once for the three upserts below, which would each
-    // re-parse the a-deck and re-join storms otherwise
-    val steps = Checkpoints.local(AtcfParser.forecastSteps(recent)
+    // held on the driver for the three upserts below while it is tiny, as
+    // in a cron cycle; steps grow with the a-deck, so a larger input stays
+    // lazy and each upsert re-parses the a-deck and re-joins storms
+    val steps = Checkpoints.localIfFits(AtcfParser.forecastSteps(recent)
       // storm inference from the FILE name; unknown storms skipped
       // (tcdb/models/database.py:26-66, adeck.py:155-160)
       .withColumn("nhc_id", graft.functions.Atcf.nhcId(

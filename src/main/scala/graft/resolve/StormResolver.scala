@@ -22,10 +22,9 @@ import graft.pipeline.Checkpoints
   * nhc_id, the closest-storm rule is a window rank over a great-circle
   * distance, and annual ids are assigned with max+row_number per
   * (season, region) — all shuffle-on-key, no driver loops, skew-safe
-  * under AQE at any storm count. Each phase ends at a seam whose kind is
-  * decided once per batch by size (see [[resolve]]): a driver-held local
-  * relation while the store and the batch are tiny, as in a 6-hourly
-  * cron cycle, and an eager local checkpoint at scale.
+  * under AQE at any storm count. Each phase ends at a driver-held seam
+  * (see [[resolve]]): every phase outputs at most one row per storm plus
+  * one per landed file, a bound that stays small at any data scale.
   */
 object StormResolver {
 
@@ -65,22 +64,17 @@ object StormResolver {
     // Each phase's output is referenced several times by the next phase,
     // so every phase ends at a seam: without one the logical plan tree
     // duplicates multiplicatively and Catalyst spends minutes OPTIMIZING
-    // a one-row batch. The seam kind is decided once, here, from the two
-    // inputs: every phase outputs at most |existing| + |summaries| rows
-    // of the storms shape (an incoming row updates, claims or adds one
-    // storm), so when both inputs fit the broadcast threshold together,
-    // every phase does too. Then the store rows and each phase's output
-    // are held on the driver (Checkpoints.toLocal), and the joins between
-    // them broadcast without a job. The joined frames are not gated on
-    // their own estimates: non-CBO join estimates are products. At scale,
-    // or on an input of unknown size, the seams are eager checkpoints.
-    val onDriver = Checkpoints.fitsLocal(existingIn, summaries)
-    val seam: DataFrame => DataFrame =
-      if (onDriver) Checkpoints.toLocal else Checkpoints.stable
-    val existing = if (onDriver) seam(existingIn) else existingIn
+    // a one-row batch. The seams hold the frames on the driver: the store
+    // has one row per storm and the batch one row per landed file, and
+    // every phase outputs at most |existing| + |summaries| rows of the
+    // storms shape (an incoming row updates, claims or adds one storm),
+    // so no seam outgrows a driver-side relation at any archive size.
+    // The store rows are held too, so the joins between them broadcast
+    // without a job.
+    val existing = Checkpoints.toLocal(existingIn)
 
     // status stamp: Active if observed within 16 h (process_storms.py:205-208)
-    val stamped = seam(summaries.withColumn("status",
+    val stamped = Checkpoints.toLocal(summaries.withColumn("status",
       when(unix_timestamp(lit(now)) - unix_timestamp(col("end_date")) <= 16 * 3600,
         "Active").otherwise("Archive")))
 
@@ -89,8 +83,8 @@ object StormResolver {
       // stale invests (no obs for 24 h) are ignored (process_storms.py:79-81)
       .filter(unix_timestamp(lit(now)) - unix_timestamp(col("end_date")) < 24 * 3600)
 
-    val postNamed = seam(resolveNamed(existing, named, runId))
-    val postBoth  = seam(resolveInvests(postNamed, invests, runId))
+    val postNamed = Checkpoints.toLocal(resolveNamed(existing, named, runId))
+    val postBoth  = Checkpoints.toLocal(resolveInvests(postNamed, invests, runId))
     assignAnnualIds(postBoth)
   }
 

@@ -36,21 +36,17 @@ class CheckpointsSpec extends AnyFunSuite {
     assert(relRows == local.collect().map(_.getInt(0)).sorted.toSeq)
   }
 
-  test("local holds a frame that fits on the driver and checkpoints it " +
-      "when the broadcast threshold is -1; rows identical either way") {
+  test("localIfFits holds a frame that fits on the driver and leaves it " +
+      "as it is when the broadcast threshold is -1") {
     def onDriver(df: DataFrame) = df.queryExecution.analyzed.collectLeaves()
       .forall(_.isInstanceOf[LocalRelation])
     val df = spark.range(100).toDF("x")
-    val held = Checkpoints.local(df)
+    val held = Checkpoints.localIfFits(df)
     assert(onDriver(held))
-    val checkpointed = TestSpark.withConf(
-        "spark.sql.autoBroadcastJoinThreshold", "-1") {
-      val c = Checkpoints.local(df)
-      assert(!onDriver(c))
-      c.collect().map(_.getLong(0)).toSeq
+    assert(held.collect().map(_.getLong(0)).toSeq.sorted == (0L until 100L))
+    TestSpark.withConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
+      assert(Checkpoints.localIfFits(df) eq df)
     }
-    assert(held.collect().map(_.getLong(0)).toSeq.sorted == checkpointed.sorted)
-    assert(checkpointed.sorted == (0L until 100L))
   }
 
   test("an operator built on checkpoint seams returns identical results " +

@@ -114,8 +114,8 @@ class PipelineSpec extends AnyFunSuite {
     assert(store.read("steps", Schemas.steps).count() == 3)
   }
 
-  test("a cron cycle writes the same five tables with driver-held and " +
-      "checkpointed seams") {
+  test("a cron cycle writes the same five tables whether or not its " +
+      "frames fit the broadcast threshold") {
     val landingB = tmpDir("cycle_b")
     val landingA = tmpDir("cycle_a")
     writeLanding(landingB, "bal092022.dat", Seq(
@@ -150,13 +150,14 @@ class PipelineSpec extends AnyFunSuite {
         store.read(t, schema).collect().map(_.toString).sorted.toSeq }, jobs)
     }
     val (held, heldJobs) = cycles()
-    val (checkpointed, checkpointedJobs) = TestSpark.withConf(
+    // at -1 nothing fits: the steps stay lazy and no join broadcasts
+    val (unfit, unfitJobs) = TestSpark.withConf(
       "spark.sql.autoBroadcastJoinThreshold", "-1")(cycles())
-    tables.map(_._1).zip(held.zip(checkpointed)).foreach { case (t, (h, c)) =>
-      assert(h == c, s"table $t differs between the seam regimes")
+    tables.map(_._1).zip(held.zip(unfit)).foreach { case (t, (h, u)) =>
+      assert(h == u, s"table $t differs between the two thresholds")
     }
-    assert(heldJobs < checkpointedJobs,
-      s"driver-held cycle ran $heldJobs jobs, checkpointed $checkpointedJobs")
+    assert(heldJobs < unfitJobs,
+      s"cycle ran $heldJobs jobs at the default threshold, $unfitJobs at -1")
     // CARQ's -12 and -6 share the null hour: one step, not two
     assert(held(4).size == 4, held(4).mkString("\n"))
   }

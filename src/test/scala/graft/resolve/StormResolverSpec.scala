@@ -9,9 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.{JobCount, TestSpark}
 import graft.schema.Schemas
 
-/** FIXTURES.md §5 entity-resolution scenarios, each run in both seam
-  * regimes: driver-held local relations (the default broadcast threshold)
-  * and eager checkpoints (threshold -1). */
+/** FIXTURES.md §5 entity-resolution scenarios, each run twice: with the
+  * default broadcast threshold and at -1, which plans the joins between
+  * the driver-held seams as sort-merge joins. */
 class StormResolverSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -30,33 +30,34 @@ class StormResolverSpec extends AnyFunSuite {
       end: String, name: String, annual: Integer = 1, lat: Double = 26.8,
       lon: Double = -82.3, status: String = "Active",
       runId: String = "old"): DataFrame =
-    // local relations, like a store read, carry a size estimate
-    spark.createDataFrame(java.util.List.of(Row(
+    // RDD-backed, as a store read of a missing table is: no size estimate
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq(Row(
         annual, region, num, nhcId, 2022: Integer, ts(start), ts(end),
-        status, name, lat, lon, runId, null)),
+        status, name, lat, lon, runId, null))),
       Schemas.storms)
 
   private val empty = spark.createDataFrame(
-    java.util.List.of[Row](), Schemas.storms)
+    spark.sparkContext.emptyRDD[Row], Schemas.storms)
 
   private def onDriver(df: DataFrame): Boolean =
     df.queryExecution.analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation])
 
-  /** Resolve with driver-held seams and again with checkpoint seams;
-    * both must give the same table. Returns its rows. */
+  /** Resolve at the default broadcast threshold and again at -1; both
+    * must hold every seam on the driver and give the same table. Returns
+    * its rows. */
   private def resolve(existing: DataFrame, batch: DataFrame,
       runId: String): Array[Row] = {
-    def run() = StormResolver.resolve(existing, batch, now, runId)
-    val local = run()
-    assert(onDriver(local), "tiny inputs must take the driver-held seams")
-    val rows = local.collect()
-    val checkpointed = TestSpark.withConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
-      val df = run()
-      assert(!onDriver(df), "threshold -1 must take the checkpoint seams")
+    def run() = {
+      val df = StormResolver.resolve(existing, batch, now, runId)
+      assert(onDriver(df), "every seam must be held on the driver")
       df.collect()
     }
+    val rows = run()
+    val sortMerged = TestSpark.withConf(
+      "spark.sql.autoBroadcastJoinThreshold", "-1")(run())
     assert(rows.map(_.toString).sorted.toSeq ==
-      checkpointed.map(_.toString).sorted.toSeq)
+      sortMerged.map(_.toString).sorted.toSeq)
     rows
   }
 
@@ -191,9 +192,15 @@ class StormResolverSpec extends AnyFunSuite {
 
   test("driver-held seams cap the jobs of a resolve over a tiny batch") {
     // both phases run (a named storm and a live invest against a stored
-    // storm); the count covers the seams and the final table's collect
-    val (_, jobs) = JobCount(spark)(
-      StormResolver.resolve(mixedStore, mixedBatch, now, "r1").collect())
-    assert(jobs <= 18, s"$jobs jobs")
+    // storm); the count covers the seams and the final table's collect.
+    // At threshold -1 the same seams join without broadcasts, which costs
+    // shuffle jobs: the pin must sit below that.
+    def jobs() = JobCount(spark)(
+      StormResolver.resolve(mixedStore, mixedBatch, now, "r1").collect())._2
+    val held = jobs()
+    val unbroadcast = TestSpark.withConf(
+      "spark.sql.autoBroadcastJoinThreshold", "-1")(jobs())
+    assert(held <= 19 && held < unbroadcast,
+      s"$held jobs held, $unbroadcast without broadcasts")
   }
 }
