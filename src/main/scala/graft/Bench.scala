@@ -22,6 +22,12 @@ import org.apache.spark.sql.SparkSession
   * are written to the detail file so a contiguous slow span is
   * self-diagnosing from the artifact alone.
   *
+  * Failures are loud: a gate that throws in any pass is named on
+  * stderr, left out of `value` and `queries`, counted as `"failed":N`
+  * on both stdout lines and listed in the detail file's
+  * `failed_gates`; with SPARK_GRAFT_BENCH_STRICT=1 the run then exits
+  * non-zero.
+  *
   * Streaming-gate caveat (round-19 verdict residual): the 9 streaming
   * gates memoize their drained sink per (session, dir) — the stream
   * executes ONCE, in the untimed warm pass, and the timed repeats read
@@ -72,20 +78,19 @@ object Bench {
     // contention guard BEFORE any timing: a concurrent JVM makes every
     // number in this run suspect. Loud by default; strict mode (for
     // certification runs) refuses to produce a polluted artifact.
+    val strict = sys.env.get("SPARK_GRAFT_BENCH_STRICT").contains("1")
     val foreign = foreignJvms()
     if (foreign.nonEmpty) {
       println(s"BENCH GUARD: ${foreign.size} foreign JVM(s) running " +
         s"(pids ${foreign.mkString(", ")}) — timings will be contended.")
-      if (sys.env.get("SPARK_GRAFT_BENCH_STRICT").contains("1")) {
+      if (strict) {
         println("BENCH GUARD: SPARK_GRAFT_BENCH_STRICT=1 — aborting.")
         sys.exit(2)
       }
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Session.configure(
-      SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
+    val cpus = spark.sparkContext.master.stripPrefix("local[").stripSuffix("]")
     // optional local-iteration filter: comma-separated name prefixes
     val filtered = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
     val only: String => Boolean = filtered match {
@@ -97,10 +102,18 @@ object Bench {
         java.nio.file.Paths.get("bench_full.json")), "UTF-8"))
       catch { case _: Throwable => Map.empty }
     val qs = SparkEntry.queries.toSeq.sortBy(_._1).filter(q => only(q._1))
-    def runOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
-    qs.foreach { case (_, fn) => runOnce(fn) } // warm pass, untimed
+    // A gate that throws in ANY pass (warm or timed) is reported by name
+    // and left out of the total and the per-query map: timing a failure
+    // at its failure latency would sum a broken gate into the result.
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
+    def runOnce(name: String,
+        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Boolean =
+      try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        false
+      }
+    qs.foreach { case (name, fn) => if (!runOnce(name, fn)) failed += name } // warm pass, untimed
     val repeats = sys.env.get("SPARK_GRAFT_BENCH_REPEATS")
       .flatMap(s => scala.util.Try(s.toInt).toOption).filter(_ > 0).getOrElse(3)
     val samples = Array.fill(qs.size)(Array.fill(repeats)(0.0))
@@ -109,10 +122,11 @@ object Bench {
     for (r <- 0 until repeats; i <- qs.indices) {
       starts(i)(r) = (System.nanoTime() - suiteT0) / 1e9
       val t0 = System.nanoTime()
-      runOnce(qs(i)._2)
+      if (!runOnce(qs(i)._1, qs(i)._2)) failed += qs(i)._1
       samples(i)(r) = (System.nanoTime() - t0) / 1e9
     }
-    val results = qs.indices.map(i => qs(i)._1 -> samples(i).min)
+    val results = qs.indices.filterNot(i => failed(qs(i)._1))
+      .map(i => qs(i)._1 -> samples(i).min)
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
     // Full per-query detail goes to a file (and an early log line): the
     // harness only retains the LAST ~2000 chars of stdout, so the line it
@@ -127,7 +141,7 @@ object Bench {
     // (e.g. "*") is emitted quoted so the line stays valid JSON.
     val cpusJson = if (cpus.matches("\\d+")) cpus else "\"" + cpus + "\""
     val fullLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpusJson,"queries":$fullQs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","cpus":$cpusJson,"failed":${failed.size},"queries":$fullQs,"sf":"$sfDir"}"""
     // Detail line adds per-repeat samples and suite-relative start offsets
     // (file only — stdout stays compact): a contention window shows up as
     // one inflated sample column across a contiguous start-offset span.
@@ -139,8 +153,10 @@ object Bench {
       "\"" + qs(i)._1 + "\":[" +
         starts(i).map(s => f"$s%.1f").mkString(",") + "]"
     }.mkString("{", ",", "}")
+    val failedNames = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val detailLine = fullLine.dropRight(1) +
       s""","repeats":$repeats,"foreign_jvms":${foreign.size}""" +
+      s""","failed_gates":$failedNames""" +
       s""","samples":$perRepeat,"starts":$startOffsets}"""
     val outFile =
       if (filtered.isDefined) "bench_filtered.json" else "bench_full.json"
@@ -189,17 +205,26 @@ object Bench {
       println("TRIPWIRE: no comparable queries vs baseline — regression check did NOT run.")
     }
     spark.stop()
-    // Compact summary line, printed LAST: total over ALL queries, plus the
-    // slowest queries (3-decimal secs) until a 1600-char budget is hit.
+    // Compact summary line, printed LAST: total over every gate that
+    // succeeded, the failed-gate count, plus the slowest queries
+    // (3-decimal secs) while the whole line stays under 1600 chars.
     val sb = new StringBuilder
-    sb.append(f"""{"metric":"total","value":$total%.3f,"unit":"sec","n":${results.size},"cpus":$cpusJson,""")
+    sb.append(f"""{"metric":"total","value":$total%.3f,"unit":"sec","n":${results.size},"cpus":$cpusJson,"failed":${failed.size},""")
     sb.append("\"queries\":{")
+    val tail = s"""},"sf":"$sfDir"}"""
     var first = true
     for ((k, v) <- results.sortBy(-_._2)) {
       val entry = (if (first) "" else ",") + "\"" + k + "\":" + f"$v%.3f"
-      if (sb.length + entry.length < 1600) { sb.append(entry); first = false }
+      if (sb.length + entry.length + tail.length < 1600) {
+        sb.append(entry); first = false
+      }
     }
-    sb.append(s"""},"sf":"$sfDir"}""")
+    sb.append(tail)
     println(sb.toString)
+    if (failed.nonEmpty && strict) {
+      System.err.println(s"BENCH: SPARK_GRAFT_BENCH_STRICT=1 — ${failed.size} " +
+        s"gate(s) failed: ${failed.mkString(", ")}")
+      sys.exit(3)
+    }
   }
 }

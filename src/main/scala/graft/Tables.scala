@@ -15,7 +15,7 @@ object Tables {
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     // The events table stores TIMESTAMP(NANOS) parquet, which Spark only
     // reads as long (spark.sql.legacy.parquet.nanosAsLong=true — set in
-    // Session.configure). All values are microsecond-aligned, so integer
+    // graft.Session.local). All values are microsecond-aligned, so integer
     // division to micros is lossless (`div`, not `/`: a double roundtrip
     // of an epoch-ns long loses precision).
     // NTZ keeps every downstream timestamp naive-UTC end to end (parquet

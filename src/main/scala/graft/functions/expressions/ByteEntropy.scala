@@ -18,10 +18,9 @@ import org.apache.spark.sql.types.{BinaryType, DataType, LongType, StructField, 
   * [[PqEncode]] / [[CharSig]] precedent; guide §4 non-codegen
   * expressions in the hot path, §2.1 a removable shuffle).
   *
-  * Bit-identity with the expression form it replaced (retained as
-  * `textEntropyHof`, kill switch `-Dgraft.text.nativeEntropy=false`;
-  * TextEntropySpec pins row equality on real sf0.001 documents and on
-  * planted edge docs):
+  * Bit-identity with the expression form it replaced (kept in test
+  * scope as TextEntropySpec's oracle, which pins row equality on real
+  * sf0.001 documents and on planted edge docs):
   *   - the byte histogram is exact integer counting, order-free;
   *   - `log2(n/nc)` goes through
   *     [[graft.functions.PortableMath.log2MicroConst]] — the driver-side

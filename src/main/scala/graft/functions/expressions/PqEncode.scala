@@ -20,7 +20,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
   * Integer arithmetic throughout and strict `<` keeps the first (=
   * smallest) code on distance ties, so the result is element-identical
   * to the HOF form `sort_array(array(struct(d, c)...))[0].c` (ascending
-  * struct order = (d, c) lexicographic). The codebooks ride the
+  * struct order = (d, c) lexicographic; kept in test scope as PqSpec's
+  * oracle, which pins the equality). The codebooks ride the
   * expression as a flat literal (`flatBooks(s*k*subDim + c*subDim + j)`),
   * exactly like the HOF form inlined them as typedlit codewords — no
   * join, no broadcast.

@@ -99,9 +99,8 @@ object TextOps {
     * log and term fold in one codegen'd byte loop), no explode, no
     * aggregate exchange. Linear in corpus bytes; nothing is collected,
     * nothing is pairwise. Bit-identical to the expression form it
-    * replaced (retained below as [[textEntropyHof]], kill switch
-    * `-Dgraft.text.nativeEntropy=false`, equality pinned in
-    * TextEntropySpec): the portable log goes through
+    * replaced (kept in test scope as TextEntropySpec's oracle, which
+    * pins the equality): the portable log goes through
     * [[graft.functions.PortableMath.log2MicroConst]] — the same
     * exact-IEEE digit extraction, already spec-pinned against the
     * column form — and everything around it is exact integer
@@ -109,9 +108,7 @@ object TextOps {
     * explode's empty-document behavior (no byte rows ⇒ absent from the
     * output). */
   def textEntropy(spark: SparkSession, dir: String): DataFrame =
-    if (sys.props.get("graft.text.nativeEntropy").contains("false"))
-      textEntropyHof(spark, dir)
-    else load(spark, dir, "documents")
+    load(spark, dir, "documents")
       .select(col("doc_id"), col("lang"),
         octet_length(col("text")).as("n"),
         col("text").cast("binary").as("b"))
@@ -121,53 +118,6 @@ object TextOps {
           .as("s"))
       .select(col("doc_id"), col("lang"), col("s.n_chars"),
         col("s.n_distinct_chars"), col("s.entropy_ubits"))
-      .orderBy("doc_id")
-
-  /** The composed-built-ins entropy (per-byte explode + histogram
-    * aggregate + DISTINCT-pair broadcast log join + per-doc fold) that
-    * [[textEntropy]]'s native kernel replaced — retained as the
-    * equivalence baseline for TextEntropySpec and the kill switch. */
-  private[graft] def textEntropyHof(spark: SparkSession, dir: String): DataFrame =
-    load(spark, dir, "documents")
-      .select(col("doc_id"), col("lang"),
-        octet_length(col("text")).as("n"),
-        col("text").cast("binary").as("b"))
-      .select(col("doc_id"), col("lang"), col("n"),
-        // empty docs: sequence(1, 0) would count DOWN (the Text.scala:26
-        // guard) — emit no byte rows, matching the oracle's empty unnest
-        explode(when(col("n") >= 1,
-          transform(sequence(lit(1), col("n")),
-            i => conv(hex(col("b").substr(i, lit(1))), 16, 10).cast("int")))
-          .otherwise(array().cast("array<int>"))).as("ch"))
-      .groupBy("doc_id", "lang", "n", "ch")
-      .agg(count(lit(1)).as("nc"))
-      // portable log2(n/nc) in 2^-20 units (graft.functions.PortableMath
-      // — exponent from the quotient's bit length, 20 fraction digits by
-      // exact-IEEE squaring), evaluated once per DISTINCT (n, nc) pair
-      // and broadcast back (the 20-step extraction is an interpreted
-      // HOF; (n, nc) pairs repeat heavily across documents — measured
-      // 2.4x on the gate when inlined per histogram row), then pure
-      // integer term arithmetic
-      .transform { hist =>
-        val pairs = hist.select("n", "nc").distinct()
-          .withColumn("lmicro",
-            graft.functions.PortableMath.log2Micro(col("n"), col("nc")))
-        hist.join(broadcast(pairs), Seq("n", "nc"))
-      }
-      .select(col("doc_id"), col("lang"), col("n"),
-        graft.functions.PortableMath.longDiv(
-          col("nc").cast("long") * col("lmicro") * lit(1000000L),
-          col("n").cast("long") * lit(1048576L)).as("tm"))
-      .groupBy("doc_id", "lang")
-      .agg(max(col("n")).cast("long").as("n_chars"),
-        count(lit(1)).as("n_distinct_chars"),
-        // exact integer micro-bits, never a rounded double: with both
-        // engines' term sums identical, round(sum/1e6, 4) was STILL the
-        // last divergence — sums ending in ...50 are exact decimal ties
-        // at the 4th decimal, and Spark (BigDecimal HALF_UP on the
-        // double's exact binary value) and DuckDB (scaled multiply)
-        // resolve them differently. The caller divides by 1e6.
-        sum(col("tm")).as("entropy_ubits"))
       .orderBy("doc_id")
 
   private val textEntropyOracle: String =
@@ -198,21 +148,13 @@ object TextOps {
     * (shared Romance core vocabulary), so separating them exercises the
     * rank-order profiles where a hit-count argmax collapses. Shared by
     * the Spark query and the DuckDB oracle. */
-  private val langPhrases: Seq[(String, String)] = Seq(
+  private[graft] val langPhrases: Seq[(String, String)] = Seq(
     "de" -> "der richtige fuchs und die schnellen hunde sich einig in der geschichte",
     "en" -> "the quick brown fox and the young things bring an action of their own making",
     "es" -> "la cantidad del valor de los datos que el estado adecuado menciona en la nacion",
     "fr" -> "les quatre lettres que le document entier faisait envers leur valeur noire",
     "pt" -> "a quantidade do valor dos dados que o estado adequado menciona na nacao e nas cidades",
     "zh" -> "zhe shi yi zhang hen chang de wen jian shang mian you hao duo sheng yong chuan")
-
-  /** Out-of-place penalty for a document trigram absent from a language
-    * profile — Cavnar & Trenkle use EACH language's own profile length
-    * (a global max would bias distances toward shorter-profiled
-    * languages if profile depths ever diverge), so both engines derive
-    * it per language from the profile relation itself. */
-  private val langProfileLengths: Seq[(String, Int)] =
-    Text.langProfilesRanked.map { case (l, ts) => (l, ts.size) }
 
   /** Char-trigram language identification, full Cavnar & Trenkle: the
     * document's OWN trigram frequency ranking (count desc, trigram asc —
@@ -234,98 +176,27 @@ object TextOps {
     * once (the old two-branch union re-scanned it for the trigram-less
     * 'und' docs; the CASE routes them in the same pass by the same
     * predicate). Bit-identical to the expression form it replaced
-    * (retained below as [[textLangidHof]], kill switch
-    * `-Dgraft.text.nativeLangid=false`, equality pinned in
-    * TextLangIdSpec): same code-point trigram slices, same binary
+    * (kept in test scope as TextLangIdSpec's oracle, which pins the
+    * equality): same code-point trigram slices, same binary
     * string grouping/tie order, same exact integer distances, same
     * argmin tie rule. */
-  def textLangid(spark: SparkSession, dir: String): DataFrame =
-    if (sys.props.get("graft.text.nativeLangid").contains("false"))
-      textLangidHof(spark, dir)
-    else {
-      val elang = when(col("lang") === "es" && col("doc_id") % 2 === 1,
-        lit("pt")).otherwise(col("lang"))
-      val phrase = langPhrases.tail.foldLeft(
-        when(col("elang") === langPhrases.head._1, lit(langPhrases.head._2))) {
-        case (acc, (l, p)) => acc.when(col("elang") === l, lit(p))
-      }.otherwise(lit(""))
-      load(spark, dir, "documents")
-        .withColumn("elang", elang)
-        .withColumn("s",
-          lower(substring(concat(phrase, lit(" "), col("text")), 1, 96)))
-        .select(col("elang"),
-          // same routing predicate as the old union's und branch: a
-          // window with no trigram (null text or < 3 chars) is 'und'
-          when(coalesce(length(col("s")), lit(0)) < 3, lit("und"))
-            .otherwise(graft.functions.expressions.LangIdGuess
-              .langIdGuess(col("s"))).as("guess"))
-        .groupBy(col("elang").as("lang"), col("guess"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy("lang", "guess")
-    }
-
-  /** The composed-built-ins classifier (explode + doc_id ranking windows
-    * + broadcast profile join + per-language fold + und-branch union)
-    * that [[textLangid]]'s native kernel replaced — retained as the
-    * equivalence baseline for TextLangIdSpec and the kill switch. */
-  private[graft] def textLangidHof(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import spark.implicits._
+  def textLangid(spark: SparkSession, dir: String): DataFrame = {
     val elang = when(col("lang") === "es" && col("doc_id") % 2 === 1,
       lit("pt")).otherwise(col("lang"))
     val phrase = langPhrases.tail.foldLeft(
       when(col("elang") === langPhrases.head._1, lit(langPhrases.head._2))) {
       case (acc, (l, p)) => acc.when(col("elang") === l, lit(p))
     }.otherwise(lit(""))
-    val scored = load(spark, dir, "documents")
+    load(spark, dir, "documents")
       .withColumn("elang", elang)
       .withColumn("s",
         lower(substring(concat(phrase, lit(" "), col("text")), 1, 96)))
-    // ONE doc_id exchange carries the whole classification: the ranking
-    // window establishes hash(doc_id) partitioning, ntg rides the same
-    // window (no separate groupBy + re-join), the profile joins
-    // broadcast, and every later aggregate clusters on doc_id-prefixed
-    // keys, which the existing partitioning already satisfies. The
-    // per-language distances then fold over the LITERAL language list
-    // (map lookup per language), so the former corpus×langs cross join,
-    // its corpus-sized sort-merge join against the matches, the second
-    // argmin window, and the final corpus self-join are all gone —
-    // trigram-less docs come from a map-side re-scan filter, not a join.
-    val ranked = scored
-      .select(col("doc_id"), col("elang"),
-        explode(Text.charTrigrams(col("s"))).as("t"))
-      .groupBy("doc_id", "elang", "t").agg(count(lit(1)).as("c"))
-      .withColumn("rd", row_number().over(
-        Window.partitionBy("doc_id").orderBy(col("c").desc, col("t").asc)))
-      .withColumn("ntg", count(lit(1)).over(Window.partitionBy("doc_id")))
-    val prof = Text.langProfilesRanked.flatMap { case (l, ts) =>
-      ts.zipWithIndex.map { case (t, i) => (l, t, i + 1) }
-    }.toDF("plang", "t", "rp")
-    val perLang = ranked.join(broadcast(prof), Seq("t"), "left_outer")
-      .groupBy("doc_id", "elang", "plang")
-      .agg(sum(abs(col("rd") - col("rp"))).as("md"),
-        count(col("rp")).as("nm"), min("ntg").as("ntg"))
-    val perDoc = perLang.groupBy("doc_id", "elang")
-      .agg(min("ntg").as("ntg"),
-        map_from_entries(collect_list(when(col("plang").isNotNull,
-          struct(col("plang"), struct(col("md"), col("nm"))))))
-          .as("m"))
-    val distStructs = langProfileLengths.map { case (l, plen) =>
-      val e = element_at(col("m"), l)
-      struct(
-        (coalesce(e.getField("md"), lit(0L))
-          + (col("ntg") - coalesce(e.getField("nm"), lit(0L))) * plen)
-          .as("dist"),
-        lit(l).as("plang"))
-    }
-    val guessed = perDoc.select(col("doc_id"), col("elang"),
-      array_min(array(distStructs: _*)).getField("plang").as("guess"))
-    // documents that produced NO trigram (window shorter than 3 chars,
-    // or a NULL text making the whole window null) get a deterministic
-    // 'und' — by the same predicate charTrigrams empties on, no join
-    val und = scored.filter(coalesce(length(col("s")), lit(0)) < 3)
-      .select(col("doc_id"), col("elang"), lit("und").as("guess"))
-    guessed.unionByName(und)
+      .select(col("elang"),
+        // same routing predicate as the old union's und branch: a
+        // window with no trigram (null text or < 3 chars) is 'und'
+        when(coalesce(length(col("s")), lit(0)) < 3, lit("und"))
+          .otherwise(graft.functions.expressions.LangIdGuess
+            .langIdGuess(col("s"))).as("guess"))
       .groupBy(col("elang").as("lang"), col("guess"))
       .agg(count(lit(1)).as("n"))
       .orderBy("lang", "guess")

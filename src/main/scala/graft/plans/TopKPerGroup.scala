@@ -37,8 +37,7 @@ import org.apache.spark.sql.types.IntegerType
   * comparison.
   *
   * Registered via `SparkSessionExtensions.injectPlannerStrategy`
-  * (Session.configure) with an idempotent `experimental.extraStrategies`
-  * fallback for sessions built elsewhere.
+  * ([[TopK.extensions]], injected by `graft.Session.local`).
   */
 case class TopKPerGroup(
     groupExprs: Seq[Expression],
@@ -53,9 +52,21 @@ case class TopKPerGroup(
 }
 
 /** Plans the logical node as partial → (exchange via EnsureRequirements)
-  * → final. */
+  * → final.
+  *
+  * Spark's own InferWindowGroupLimit (an optimizer batch after the one
+  * [[TopKRewriteRule]] runs in) inserts a WindowGroupLimit between the
+  * Window and an already-injected TopKPerGroup — the same group limit
+  * computed twice, plus a per-map-partition sort the heap never needs.
+  * Dropping it is always sound: the Filter above still enforces the rank
+  * bound exactly. An injected strategy runs before Spark's
+  * WindowGroupLimit strategy, so planning the node as its child (the
+  * `SpecialLimits` precedent) removes it from the physical plan. */
 object TopKStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
+    case WindowGroupLimit(ps, os, _, limit, t: TopKPerGroup)
+        if ps == t.groupExprs && os == t.order && limit >= t.k =>
+      planLater(t) :: Nil
     case TopKPerGroup(g, o, k, child) =>
       val partial = TopKPerGroupExec(g, o, k, isFinal = false, planLater(child))
       TopKPerGroupExec(g, o, k, isFinal = true, partial) :: Nil
@@ -88,15 +99,6 @@ object TopKRewriteRule extends Rule[LogicalPlan] {
   val maxK = 1000
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
-    // Spark's own InferWindowGroupLimit (a later optimizer batch) inserts
-    // a WindowGroupLimit between the Window and our already-injected
-    // TopKPerGroup — same group-limit computed twice, plus a per-map-
-    // partition sort the heap never needs. Removing it is always sound:
-    // the Filter above still enforces the rank bound exactly. This case
-    // takes effect in the end-of-optimization user batch
-    // (experimental.extraOptimizations, Session.local/ensureRegistered).
-    case WindowGroupLimit(ps, os, _, limit, t: TopKPerGroup)
-        if ps == t.groupExprs && os == t.order && limit >= t.k => t
     case f @ Filter(cond,
         w @ Window(Seq(alias @ Alias(WindowExpression(RowNumber(), _), _)),
           ps, os, child, _))
@@ -215,8 +217,7 @@ case class TopKPerGroupExec(
 /** Public API + extension registration. */
 object TopK {
 
-  /** The native expressions exposed as SQL functions — one builder list
-    * shared by both registration paths so they can never diverge. */
+  /** The native expressions exposed as SQL functions. */
   private val sqlFunctions: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
     ("great_circle",
       classOf[graft.functions.expressions.GreatCircleDistance].getName,
@@ -272,7 +273,7 @@ object TopK {
           strip = true)
       }))
 
-  /** For `SparkSession.Builder.withExtensions` (Session.configure):
+  /** For `SparkSession.Builder.withExtensions` (`graft.Session.local`):
     * planner strategy + optimizer rewrite + the native expressions as SQL
     * functions (`great_circle(lat1, lon1, lat2, lon2)` in nautical miles,
     * `cosine_similarity(a, b)`). */
@@ -288,30 +289,12 @@ object TopK {
     }
   }
 
-  /** Idempotent runtime registration for already-built sessions — same
-    * strategy, rule, AND SQL functions as the builder-time path. */
-  def ensureRegistered(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val exp = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
-    if (!exp.extraStrategies.contains(TopKStrategy)) {
-      exp.extraStrategies = TopKStrategy +: exp.extraStrategies
-      sqlFunctions.foreach { case (name, cls, builder) =>
-        Shims.registerFunction(spark, name, cls, builder)
-      }
-    }
-    if (!exp.extraOptimizations.contains(TopKRewriteRule))
-      exp.extraOptimizations = TopKRewriteRule +: exp.extraOptimizations
-    if (!exp.extraOptimizations.contains(PrefixFrameRewriteRule))
-      exp.extraOptimizations =
-        PrefixFrameRewriteRule +: exp.extraOptimizations
-  }
-
   /** Top `k` rows of `df` per `groupCols` group under `orderCols` (use
     * `.desc`/`.asc` Columns; a bare Column means ascending). Give the
     * order a total tie-break (unique id last) for deterministic output.
     */
   def perGroup(df: DataFrame, groupCols: Seq[Column], orderCols: Seq[Column],
       k: Int): DataFrame = {
-    ensureRegistered(df.sparkSession)
     val o = orderCols.map(c => Shims.catalystExpression(c) match {
       case s: SortOrder => s
       case e => SortOrder(e, Ascending)

@@ -56,7 +56,7 @@ object Pq {
 
   /** Squared-L2 distance (micro-units²) between a sub-vector column and
     * one literal codeword — exact integer arithmetic. */
-  private def subDist(sub: Column, codeword: Array[Long]): Column =
+  private[graft] def subDist(sub: Column, codeword: Array[Long]): Column =
     aggregate(zip_with(sub, typedlit(codeword.toSeq),
         (a, b) => (a - b) * (a - b)),
       lit(0L), (a, x) => a + x)
@@ -118,34 +118,15 @@ object Pq {
   /** Encode every corpus vector as its per-subspace nearest codeword —
     * `(id, codes ARRAY<INT>)`, ties to the smallest code. One map-side
     * pass via the native fused [[graft.functions.expressions.PqEncode]]
-    * loop (element-identical to [[encodeHof]], the composed-built-ins
-    * form it replaced as the default — kill switch
-    * `-Dgraft.pq.nativeEncode=false`; PqSpec pins native == HOF on real
+    * loop (element-identical to the composed-built-ins form it
+    * replaced, which PqSpec keeps as its oracle and compares on real
     * data); the codebooks ride the plan as literals (no join, no
     * shuffle). */
   def encode(corpus: DataFrame, idCol: String, mvCol: String,
       cb: Codebooks): DataFrame =
-    if (sys.props.get("graft.pq.nativeEncode").contains("false"))
-      encodeHof(corpus, idCol, mvCol, cb)
-    else corpus.select(col(idCol).as("id"),
+    corpus.select(col(idCol).as("id"),
       graft.functions.expressions.PqEncode
         .encodeNative(col(mvCol), cb.books).as("codes"))
-
-  /** The composed-built-ins encode (m×k aggregate-over-zip_with
-    * distances + a k-struct sort_array per subspace) that [[encode]]'s
-    * native expression replaced — retained as the equivalence baseline
-    * for PqSpec and the kill switch. */
-  private[graft] def encodeHof(corpus: DataFrame, idCol: String,
-      mvCol: String, cb: Codebooks): DataFrame = {
-    val codeCols = (0 until cb.m).map { s =>
-      val sub = slice(col(mvCol), s * cb.subDim + 1, cb.subDim)
-      val entries = (0 until cb.k).map { c =>
-        struct(subDist(sub, cb.books(s)(c)).as("d"), lit(c).as("c"))
-      }
-      sort_array(array(entries: _*)).getItem(0).getField("c")
-    }
-    corpus.select(col(idCol).as("id"), array(codeCols: _*).as("codes"))
-  }
 
   /** The per-query ADC lookup table: `dt(s)(c)` = squared-L2 distance
     * (micro-units²) from the query's subspace-s sub-vector to codeword

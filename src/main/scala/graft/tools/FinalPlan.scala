@@ -24,7 +24,7 @@ object FinalPlan {
     val suffix = args(2)
     val names = args.drop(3).toSeq
     outDir.mkdirs()
-    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = Session.local()
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)
       // run THIS DataFrame's own QueryExecution (a noop write would plan

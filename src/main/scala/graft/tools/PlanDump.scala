@@ -27,13 +27,12 @@ object PlanDump {
     val suffix = args(2)
     val names = args.drop(3).toSeq
     outDir.mkdirs()
-    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    val spark = Session.local()
     // env var, not a -D: `run / fork := true` means sbt-JVM system
     // properties never reach the forked runMain JVM
-    sys.env.get("GRAFT_PLANDUMP_EXCLUDED_RULES")
-      .orElse(sys.props.get("graft.plandump.excludedRules")).foreach {
-        rules => spark.conf.set("spark.sql.optimizer.excludedRules", rules)
-      }
+    sys.env.get("GRAFT_PLANDUMP_EXCLUDED_RULES").foreach {
+      rules => spark.conf.set("spark.sql.optimizer.excludedRules", rules)
+    }
     names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)
       val text = df.queryExecution.explainString(

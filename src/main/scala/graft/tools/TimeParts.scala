@@ -7,8 +7,7 @@ import graft.{Session, SparkEntry}
 object TimeParts {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     args.drop(1).foreach { name =>
       val fn = SparkEntry.queries(name)
       fn(spark, "/root/testdata/sf0.001").write.format("noop")

@@ -8,7 +8,6 @@ object TopKBench {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val spark = Session.local()
-    spark.sparkContext.setLogLevel("WARN")
     val li = Tables.load(spark, dir, "lineitem")
     def time(tag: String)(f: => Unit): Unit = {
       f // warm

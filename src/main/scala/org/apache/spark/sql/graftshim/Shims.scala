@@ -28,14 +28,4 @@ object Shims {
 
   /** The analyzed logical plan of a DataFrame (resolved attributes). */
   def analyzedPlan(df: DataFrame): LogicalPlan = df.queryExecution.analyzed
-
-  /** Register a SQL function on an already-built session (the runtime
-    * analog of SparkSessionExtensions.injectFunction). */
-  def registerFunction(spark: SparkSession, name: String, className: String,
-      builder: Seq[Expression] => Expression): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry.registerFunction(
-        org.apache.spark.sql.catalyst.FunctionIdentifier(name),
-        new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(className, name),
-        builder)
 }

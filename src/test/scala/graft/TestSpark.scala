@@ -2,13 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for the whole forked test JVM. */
+/** One shared local session for the whole forked test JVM, built the way
+  * every entry point builds one. */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = Session.configure(
-      SparkSession.builder().master("local[4]").appName("graft-test"), "4")
-      .getOrCreate()
-    graft.plans.TopK.ensureRegistered(s) // end-of-optimization cleanup batch
+    val s = Session.local("4")
     s.sparkContext.setLogLevel("ERROR")
     s
   }
