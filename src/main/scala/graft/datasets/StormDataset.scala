@@ -8,8 +8,7 @@ import graft.schema.Schemas
 
 /** Read-path dataset assembly — the Spark rewrite of the reference's
   * object-graph walks (tcdb/datasets/storm_dataset.py, models/invest.py).
-  * The ORM storm→tracks→steps traversal becomes the J9 join pipeline;
-  * the invest snapshot is the J8 as-of lookup.
+  * The ORM storm→tracks→steps traversal becomes the J9 join pipeline.
   */
 final case class StormDataset(storm: DataFrame, forecastTable: DataFrame,
     obsTable: DataFrame)
@@ -41,23 +40,5 @@ object StormDataset {
     val storm = store.read("storms", Schemas.storms)
       .filter(col("nhc_id") === nhcId)
     StormDataset(storm, forecastTable(store, nhcId), obsTable(store, nhcId))
-  }
-
-  /** J8 — invest snapshot: the observation at `at`, or the latest one
-    * (invest.py:60-144), flattened with the storm row. */
-  def investSnapshot(store: Store, nhcId: String,
-      at: Option[java.sql.Timestamp]): DataFrame = {
-    val obs = store.read("observations", Schemas.observations)
-      .filter(col("nhc_id") === nhcId)
-    val picked = at match {
-      case Some(ts) => obs.filter(col("datetime_utc") === ts)
-      case None =>
-        obs.withColumn("__rk", row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy("nhc_id").orderBy(col("datetime_utc").desc)))
-          .filter(col("__rk") === 1).drop("__rk")
-    }
-    store.read("storms", Schemas.storms).filter(col("nhc_id") === nhcId)
-      .join(picked.drop("start_date", "run_id"), Seq("nhc_id"))
   }
 }

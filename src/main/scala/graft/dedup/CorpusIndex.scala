@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.pipeline.{FsUtils, Store}
+import graft.pipeline.{Checkpoints, FsUtils, Store}
 
 /** Persisted corpus indexes for incremental near-dup assignment — the
   * production contract behind [[Dedup.incrementalNearDup]]: a continuous
@@ -92,7 +92,11 @@ object CorpusIndex {
     * leave the OLD meta (same parameters) readable over a
     * mixed-generation index, which [[checkMeta]] would accept and
     * [[assign]] silently mis-match against. With it, a half-replaced
-    * index has no meta and fails loudly on the next use. */
+    * index has no meta and fails loudly on the next use.
+    *
+    * Keeps Spark's code generation: the build reads the full corpus, and
+    * an interpreted build would leave the Janino warm-up to the
+    * full-corpus passes that follow it. */
   def build(store: Store, prefix: String, corpus: DataFrame,
       textCol: String, idCol: String, shingleSize: Int = 3,
       numHashes: Int = 32, bands: Int = 8): Unit = {
@@ -118,19 +122,29 @@ object CorpusIndex {
     * continuous ingestion: only the three index tables are read; the
     * corpus documents themselves are never touched. Decision semantics
     * are identical to [[Dedup.incrementalNearDup]] (exact sha2 match,
-    * else LSH-verified near match, else batch-local novel closure). */
+    * else LSH-verified near match, else batch-local novel closure).
+    *
+    * When the batch and the three index tables together fit the
+    * broadcast threshold ([[Checkpoints.interpretedIfFits]]) the
+    * assignment runs without code generation and comes back driver-held
+    * (one row per batch doc): a bounded batch does too little work to
+    * repay compiling its ~70 jobs' plans. Otherwise it returns lazily,
+    * with codegen, as before. */
   def assign(store: Store, prefix: String, batch: DataFrame,
       textCol: String, idCol: String, shingleSize: Int = 3,
       numHashes: Int = 32, bands: Int = 8, threshold: Double = 0.5,
       maxIter: Int = 20): DataFrame = {
-    checkMeta(store, prefix, shingleSize, numHashes, bands)
-    IndexCommits.validate(store, prefix, Seq("_exact", "_shingles", "_bands"))
-    Dedup.assignAgainstIndexes(
-      store.read(s"${prefix}_exact", exactSchema),
-      store.read(s"${prefix}_shingles", shingleSchema),
-      store.read(s"${prefix}_bands", bandSchema),
-      batch, textCol, idCol, shingleSize, numHashes, bands, threshold,
-      maxIter)
+    val exact = store.read(s"${prefix}_exact", exactSchema)
+    val shingles = store.read(s"${prefix}_shingles", shingleSchema)
+    val bandRows = store.read(s"${prefix}_bands", bandSchema)
+    def run = {
+      checkMeta(store, prefix, shingleSize, numHashes, bands)
+      IndexCommits.validate(store, prefix, Seq("_exact", "_shingles", "_bands"))
+      Dedup.assignAgainstIndexes(exact, shingles, bandRows, batch, textCol,
+        idCol, shingleSize, numHashes, bands, threshold, maxIter)
+    }
+    Checkpoints.interpretedIfFits(batch, exact, shingles, bandRows)(
+      Checkpoints.toLocal(run)).getOrElse(run)
   }
 
   /** Append accepted new corpus members (novel self-representatives of an
@@ -141,19 +155,25 @@ object CorpusIndex {
     * re-publishing the same tag REPLACES the previous attempt's files
     * instead of duplicating them (replay-safe; pair with [[clearBatch]]
     * at batch start for exactly-once effects under foreachBatch's
-    * at-least-once delivery). */
+    * at-least-once delivery).
+    *
+    * Runs without code generation when `accepted` fits the broadcast
+    * threshold, as [[assign]] does. */
   def append(store: Store, prefix: String, accepted: DataFrame,
       textCol: String, idCol: String, batchTag: String,
       shingleSize: Int = 3, numHashes: Int = 32, bands: Int = 8): Unit = {
-    checkMeta(store, prefix, shingleSize, numHashes, bands)
-    val (exact, rows) = indexRows(accepted, textCol, idCol, shingleSize)
-    val r = rows.persist()
-    FsUtils.publishBatch(exact, store.path(s"${prefix}_exact"), batchTag)
-    FsUtils.publishBatch(r, store.path(s"${prefix}_shingles"), batchTag)
-    FsUtils.publishBatch(
-      Dedup.portableBandRows(r, numHashes, bands).toDF("cid", "band", "bsig"),
-      store.path(s"${prefix}_bands"), batchTag)
-    r.unpersist(false)
+    def publish(): Unit = {
+      checkMeta(store, prefix, shingleSize, numHashes, bands)
+      val (exact, rows) = indexRows(accepted, textCol, idCol, shingleSize)
+      val r = rows.persist()
+      FsUtils.publishBatch(exact, store.path(s"${prefix}_exact"), batchTag)
+      FsUtils.publishBatch(r, store.path(s"${prefix}_shingles"), batchTag)
+      FsUtils.publishBatch(
+        Dedup.portableBandRows(r, numHashes, bands).toDF("cid", "band", "bsig"),
+        store.path(s"${prefix}_bands"), batchTag)
+      r.unpersist(false)
+    }
+    Checkpoints.interpretedIfFits(accepted)(publish()).getOrElse(publish())
     // cross-table commit point, written LAST: a crash anywhere above
     // leaves the tag uncommitted and [[IndexCommits.validate]] fails the next
     // assign loudly instead of near-matching against a partial batch

@@ -25,7 +25,10 @@ import graft.pipeline.{FsUtils, Store}
   * appends are batch-tagged file publications with the same cross-table
   * commit markers ([[IndexCommits]]) and the same clearBatch +
   * same-tag-replay contract as the text indexes, and
-  * [[Store.compactBatched]] applies to both tables via [[compact]]. */
+  * [[Store.compactBatched]] applies to both tables via [[compact]].
+  *
+  * Keeps Spark's code generation, unlike [[CorpusIndex]]'s batch path:
+  * no workload measures its batches yet. */
 object EmbeddingIndex {
 
   private val vecsSchema = StructType(Seq(

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.internal.SQLConf
 
 /** Reliability posture for the engine's eager checkpoint sites (round-19
   * verdict item 7).
@@ -33,6 +34,11 @@ import org.apache.spark.sql.{DataFrame, Dataset}
   * pre-execution size estimate. A driver-held relation is lost only with
   * the driver, which loses the whole application anyway, so
   * `graft.checkpoint.reliable` does not apply to it.
+  *
+  * [[interpretedIfFits]] is the matching posture for code generation: a
+  * body whose inputs fit the same threshold runs without Janino, since
+  * compiling its plans costs more CPU than the compiled code saves on
+  * inputs that small.
   */
 object Checkpoints {
   private def reliable: Boolean =
@@ -49,19 +55,62 @@ object Checkpoints {
       df.checkpoint()
     }
 
-  /** `df` held on the driver ([[toLocal]]) when Spark's pre-execution
-    * size estimate of it (file bytes and plan statistics, the figure its
-    * broadcast planning reads) is at most
-    * `spark.sql.autoBroadcastJoinThreshold`, else `df` itself,
-    * unmaterialized; never held when the threshold is -1. Non-CBO
-    * estimates of joins are products of their inputs, so gate a frame
-    * whose top join is a semi join or none. */
-  def localIfFits(df: DataFrame): DataFrame = {
-    val threshold = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-    val fits = threshold >= 0 &&
-      df.queryExecution.optimizedPlan.stats.sizeInBytes <= threshold
-    if (fits) toLocal(df) else df
+  /** Whether the summed pre-execution size estimates of `frames` (file
+    * bytes and plan statistics, the figure broadcast planning reads) are
+    * at most `spark.sql.autoBroadcastJoinThreshold`; never when the
+    * threshold is -1. Non-CBO estimates of joins are products of their
+    * inputs, so pass leaves, or frames whose top join is a semi join. */
+  private def fits(frames: Seq[DataFrame]): Boolean = {
+    val threshold =
+      frames.head.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    threshold >= 0 &&
+      frames.map(_.queryExecution.optimizedPlan.stats.sizeInBytes).sum <=
+        threshold
   }
+
+  /** `df` held on the driver ([[toLocal]]) when its estimate [[fits]],
+    * else `df` itself, unmaterialized. */
+  def localIfFits(df: DataFrame): DataFrame =
+    if (fits(Seq(df))) toLocal(df) else df
+
+  /** `Some(body)`, run with `spark.sql.codegen.factoryMode=NO_CODEGEN`
+    * set on the session of `inputs`, when their summed estimate [[fits]];
+    * else `None`, and `body` does not run, so the caller keeps Spark's
+    * lazy whole-stage codegen path. Under the posture Spark plans no
+    * whole-stage codegen and evaluates every expression interpreted;
+    * jobs started inside `body` carry the setting to their tasks. The
+    * caller's value is restored when the last scope open on the session
+    * exits, also when `body` throws, so concurrent scopes on one session
+    * nest. `body` must finish its work inside the scope (return collected
+    * or driver-held results), and the setting is session-wide while it
+    * lasts, so run nothing concurrently on the same session that should
+    * keep codegen. */
+  def interpretedIfFits[A](inputs: DataFrame*)(body: => A): Option[A] =
+    if (!fits(inputs)) None
+    else {
+      val conf = inputs.head.sparkSession.sessionState.conf
+      val key = SQLConf.CODEGEN_FACTORY_MODE.key
+      openScopes.synchronized {
+        val (open, before) = Option(openScopes.get(conf)).getOrElse(
+          (0, if (conf.contains(key)) Some(conf.getConfString(key)) else None))
+        openScopes.put(conf, (open + 1, before))
+        conf.setConfString(key, "NO_CODEGEN")
+      }
+      try Some(body)
+      finally openScopes.synchronized {
+        val (open, before) = openScopes.get(conf)
+        if (open > 1) openScopes.put(conf, (open - 1, before))
+        else {
+          openScopes.remove(conf)
+          before.fold(conf.unsetConf(key))(conf.setConfString(key, _))
+        }
+      }
+    }
+
+  /** Per session conf: the [[interpretedIfFits]] scopes open on it, and
+    * the caller's `factoryMode` the last of them restores. */
+  private val openScopes =
+    new java.util.IdentityHashMap[SQLConf, (Int, Option[String])]()
 
   /** Collect `df` once and return it as a `LocalRelation`. */
   def toLocal(df: DataFrame): DataFrame =

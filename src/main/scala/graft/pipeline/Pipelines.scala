@@ -18,6 +18,10 @@ import graft.schema.Schemas
   * reference's per-file/per-row DB round-trips become joins; its
   * `session.flush()` surrogate-id choreography disappears because every
   * table is keyed by its natural key (SURVEY.md §7.3).
+  *
+  * The cycles keep Spark's code generation ([[Checkpoints.interpretedIfFits]]
+  * is not applied): run interpreted, a cycle's ingest CPU halves, but the
+  * analyst reads that follow it then pay the Janino warm-up instead.
   */
 object Pipelines {
 

@@ -5,8 +5,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Alias, And, Ascending, Attribute, EqualTo, Expression, GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal, RowNumber, SortOrder, UnsafeProjection, UnsafeRow, WindowExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.GenerateOrdering
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, Ascending, Attribute, EqualTo, Expression, GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal, RowNumber, RowOrdering, SortOrder, UnsafeProjection, UnsafeRow, WindowExpression}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, UnaryNode, Window, WindowGroupLimit}
 import org.apache.spark.sql.catalyst.plans.physical.{AllTuples, ClusteredDistribution, Distribution, UnspecifiedDistribution}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -163,7 +162,8 @@ case class TopKPerGroupExec(
     val fin = isFinal
     child.execute().mapPartitions({ iter =>
       val keyProj = UnsafeProjection.create(g, attrs)
-      val ord = GenerateOrdering.generate(o, attrs)
+      // generated or interpreted, as spark.sql.codegen.factoryMode says
+      val ord = RowOrdering.create(o, attrs)
       // max-heap under `ord`: peek() is the WORST retained row, so a new
       // row enters iff it beats the worst; memory is bounded at k rows
       // per live group key.

@@ -139,7 +139,9 @@ object Ivf {
         <= BigInt(BroadcastMaxProbeBytes))
     val cellJoin =
       if (useBroadcast) index.assigned.join(broadcast(probes), Seq("cell"))
-      else index.assigned.join(probes.repartition(col("cell")), Seq("cell"))
+      // the hint keeps AQE from broadcasting small probes at run time
+      else index.assigned.join(
+        probes.repartition(col("cell")).hint("shuffle_merge"), Seq("cell"))
 
     val w = Window.partitionBy("qid")
       .orderBy(round(col("cos"), 6).desc, col("id").asc)

@@ -11,9 +11,10 @@ object TestSpark {
     s
   }
 
-  /** Run `body` with one SQL conf set, restoring the previous value. */
+  /** Run `body` with one SQL conf set, restoring the previous value (or
+    * leaving the key unset again when it was unset). */
   def withConf[T](key: String, value: String)(body: => T): T = {
-    val before = spark.conf.getOption(key)
+    val before = spark.sessionState.conf.getAllConfs.get(key)
     spark.conf.set(key, value)
     try body
     finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))

@@ -1,5 +1,14 @@
 package graft.dedup
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.SparkPlanInfo
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -181,5 +190,74 @@ class CorpusIndexSpec extends AnyFunSuite {
       CorpusIndex.assign(st, "c", b, "text", "doc_id", numHashes = 64)
     }
     assert(e.getMessage.contains("was built with"))
+  }
+
+  /** `body`'s result, the physical-plan node names of every SQL
+    * execution it starts (AQE re-plans included), and the Janino
+    * compiles it causes. */
+  private def traced[T](body: => T): (T, Seq[String], Long) = {
+    val sc = spark.sparkContext
+    val names = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    def walk(p: SparkPlanInfo): Unit = {
+      names.add(p.nodeName); p.children.foreach(walk)
+    }
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => walk(s.sparkPlanInfo)
+        case u: SparkListenerSQLAdaptiveExecutionUpdate => walk(u.sparkPlanInfo)
+        case _ =>
+      }
+    }
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val c0 = compiles
+      val out = body
+      ListenerBusDrain(sc)
+      (out, names.asScala.toSeq, compiles - c0)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a batch within the broadcast threshold assigns without codegen; " +
+      "at -1 it takes the lazy codegen path; rows are identical") {
+    // signature parameters no other spec uses, so Spark's codegen cache
+    // holds none of the -1 side's generated classes yet
+    val (sh, nh, bd) = (2, 24, 6)
+    val st = store()
+    CorpusIndex.build(st, "c", corpus, "text", "doc_id", sh, nh, bd)
+    val batch = Seq(
+      (20L, "one two three four five six seven eight nine ten"),
+      (21L, "alpha beta gamma delta epsilon zeta eta theta iota"),
+      (22L, "a batch doc that no corpus doc resembles at all"),
+      (23L, "a batch doc that no corpus doc resembles at all really"))
+      .toDF("doc_id", "text")
+    def assign(): (DataFrame, Seq[(Long, Long, String)]) = {
+      val df = CorpusIndex.assign(st, "c", batch, "text", "doc_id", sh, nh,
+        bd, threshold = 0.5)
+      (df, df.collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
+        .toSeq.sorted)
+    }
+    def codegen(plans: Seq[String]) = plans.exists(_.startsWith("WholeStageCodegen"))
+    val key = "spark.sql.codegen.factoryMode"
+    val before = spark.sessionState.conf.getAllConfs.get(key)
+
+    val ((small, smallRows), smallPlans, smallCompiles) = traced(assign())
+    assert(small.queryExecution.analyzed.isInstanceOf[LocalRelation])
+    assert(smallPlans.nonEmpty && !codegen(smallPlans), smallPlans.distinct)
+    assert(spark.sessionState.conf.getAllConfs.get(key) == before)
+
+    val ((lazyDf, lazyRows), lazyPlans, lazyCompiles) =
+      TestSpark.withConf("spark.sql.autoBroadcastJoinThreshold", "-1")(
+        traced(assign()))
+    assert(!lazyDf.queryExecution.analyzed.isInstanceOf[LocalRelation])
+    assert(codegen(lazyPlans), lazyPlans.distinct)
+    assert(smallCompiles < lazyCompiles, s"$smallCompiles vs $lazyCompiles")
+    info(s"Janino compiles: $smallCompiles within the threshold, $lazyCompiles at -1")
+
+    assert(smallRows == lazyRows)
+    assert(smallRows.map(r => r._1 -> r._3).toMap ==
+      Map(20L -> "exact", 21L -> "near", 22L -> "novel", 23L -> "novel"),
+      smallRows)
   }
 }

@@ -1,6 +1,8 @@
 package graft.functions
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -39,18 +41,17 @@ class JaroWinklerSpec extends AnyFunSuite {
   }
 
   test("codegen path equals the interpreted impl; nulls propagate") {
-    val df = Seq(("MARTHA", "MARHTA"), ("DWAYNE", "DUANE"),
-        ("CRATE", "TRACE"), ("", ""))
-      .toDF("a", "b")
-      .select(jaroWinklerNative(col("a"), col("b")).as("jw"))
-    val got = df.as[Double].collect().toSeq
-    val want = Seq(("MARTHA", "MARHTA"), ("DWAYNE", "DUANE"),
-      ("CRATE", "TRACE"), ("", ""))
-      .map { case (a, b) => JaroWinklerImpl.score(s(a), s(b)) }
-    assert(got == want)
-    val withNull = Seq((Some("x"), None: Option[String])).toDF("a", "b")
-      .select(jaroWinklerNative(col("a"), col("b")).as("jw"))
-    assert(withNull.collect().head.isNullAt(0))
+    val pairs = Seq(("MARTHA", "MARHTA"), ("DWAYNE", "DUANE"),
+      ("CRATE", "TRACE"), ("", ""), ("x", null))
+    val schema = StructType(Seq(StructField("a", StringType),
+      StructField("b", StringType)))
+    val want = pairs.map {
+      case (_, null) => null
+      case (a, b) => JaroWinklerImpl.score(s(a), s(b))
+    }
+    EvalModes.inBoth(EvalModes.frame(pairs.map { case (a, b) => Row(a, b) },
+        schema).select(jaroWinklerNative(col("a"), col("b"))))
+      .foreach(got => assert(got.map(_.get(0)) == want))
   }
 
   test("registered for SQL as jaro_winkler") {

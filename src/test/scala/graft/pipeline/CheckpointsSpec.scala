@@ -49,6 +49,52 @@ class CheckpointsSpec extends AnyFunSuite {
     }
   }
 
+  test("interpretedIfFits sets NO_CODEGEN only inside its scope, restores " +
+      "the caller's value on a throw, and does not run at threshold -1") {
+    val key = "spark.sql.codegen.factoryMode"
+    val conf = spark.sessionState.conf
+    def mode = conf.getAllConfs.get(key)
+    val before = mode
+    val small = spark.range(10).toDF("x")
+    assert(Checkpoints.interpretedIfFits(small)(mode).contains(Some("NO_CODEGEN")))
+    assert(mode == before)
+    TestSpark.withConf(key, "CODEGEN_ONLY") {
+      intercept[IllegalStateException] {
+        Checkpoints.interpretedIfFits(small)(throw new IllegalStateException)
+      }
+      assert(mode.contains("CODEGEN_ONLY"))
+    }
+    assert(mode == before)
+    TestSpark.withConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
+      var ran = false
+      assert(Checkpoints.interpretedIfFits(small) { ran = true }.isEmpty)
+      assert(!ran)
+    }
+  }
+
+  test("concurrent interpretedIfFits scopes on one session nest: the " +
+      "first to exit leaves the posture to the other, the last restores") {
+    import java.util.concurrent.CountDownLatch
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    def mode = spark.sessionState.conf.getAllConfs.get("spark.sql.codegen.factoryMode")
+    val before = mode
+    val small = spark.range(10).toDF("x")
+    val (opened, release) = (new CountDownLatch(1), new CountDownLatch(1))
+    val outer = Future(Checkpoints.interpretedIfFits(small) {
+      opened.countDown(); release.await()
+    })
+    opened.await()
+    val inner = Checkpoints.interpretedIfFits(small) {
+      release.countDown()
+      Await.result(outer, 1.minute) // the outer scope exits first
+      mode
+    }
+    assert(inner.contains(Some("NO_CODEGEN")))
+    assert(mode == before)
+  }
+
   test("an operator built on checkpoint seams returns identical results " +
       "under the reliable posture (dedup group closure, sf0.001)") {
     val dir = "/root/testdata/sf0.001"
