@@ -20,12 +20,7 @@ import org.apache.spark.sql.SparkSession
   * queries instead of ALL samples of a few, and the min recovers the
   * clean number. Per-repeat durations and suite-relative start offsets
   * are written to the detail file so a contiguous slow span is
-  * self-diagnosing from the artifact alone. The detail file also keeps a
-  * compile layer per gate and pass (warm pass first, then each repeat):
-  * Janino compiles (Spark's `CodegenMetrics` count) and JIT milliseconds
-  * (`CompilationMXBean`). Both are JVM-wide deltas over the gate's
-  * pass, so background JIT work started by an earlier gate can land on
-  * a later one.
+  * self-diagnosing from the artifact alone.
   *
   * Failures are loud: a gate that throws in any pass is named on
   * stderr, left out of `value` and `queries`, counted as `"failed":N`
@@ -111,34 +106,23 @@ object Bench {
     // and left out of the total and the per-query map: timing a failure
     // at its failure latency would sum a broken gate into the result.
     val failed = scala.collection.mutable.LinkedHashSet.empty[String]
-    val repeats = sys.env.get("SPARK_GRAFT_BENCH_REPEATS")
-      .flatMap(s => scala.util.Try(s.toInt).toOption).filter(_ > 0).getOrElse(3)
-    // compile layer, per gate and pass: index 0 is the warm pass
-    val janino = Array.fill(qs.size)(Array.fill(repeats + 1)(0L))
-    val jitMs = Array.fill(qs.size)(Array.fill(repeats + 1)(0L))
-    val jit = java.lang.management.ManagementFactory.getCompilationMXBean
-    def compiles = org.apache.spark.metrics.source.CodegenMetrics
-      .METRIC_COMPILATION_TIME.getCount
-    def runOnce(i: Int, pass: Int): Boolean = {
-      val (name, fn) = qs(i)
-      val (c0, j0) = (compiles, jit.getTotalCompilationTime)
+    def runOnce(name: String,
+        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Boolean =
       try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
       catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
         false
-      } finally {
-        janino(i)(pass) = compiles - c0
-        jitMs(i)(pass) = jit.getTotalCompilationTime - j0
       }
-    }
-    qs.indices.foreach(i => if (!runOnce(i, 0)) failed += qs(i)._1) // warm pass, untimed
+    qs.foreach { case (name, fn) => if (!runOnce(name, fn)) failed += name } // warm pass, untimed
+    val repeats = sys.env.get("SPARK_GRAFT_BENCH_REPEATS")
+      .flatMap(s => scala.util.Try(s.toInt).toOption).filter(_ > 0).getOrElse(3)
     val samples = Array.fill(qs.size)(Array.fill(repeats)(0.0))
     val starts = Array.fill(qs.size)(Array.fill(repeats)(0.0))
     val suiteT0 = System.nanoTime()
     for (r <- 0 until repeats; i <- qs.indices) {
       starts(i)(r) = (System.nanoTime() - suiteT0) / 1e9
       val t0 = System.nanoTime()
-      if (!runOnce(i, r + 1)) failed += qs(i)._1
+      if (!runOnce(qs(i)._1, qs(i)._2)) failed += qs(i)._1
       samples(i)(r) = (System.nanoTime() - t0) / 1e9
     }
     val results = qs.indices.filterNot(i => failed(qs(i)._1))
@@ -161,18 +145,19 @@ object Bench {
     // Detail line adds per-repeat samples and suite-relative start offsets
     // (file only — stdout stays compact): a contention window shows up as
     // one inflated sample column across a contiguous start-offset span.
-    def perGate[T](xs: Array[Array[T]], fmt: T => String) = qs.indices.map { i =>
-      "\"" + qs(i)._1 + "\":[" + xs(i).map(fmt).mkString(",") + "]"
+    val perRepeat = qs.indices.map { i =>
+      "\"" + qs(i)._1 + "\":[" +
+        samples(i).map(s => f"$s%.3f").mkString(",") + "]"
     }.mkString("{", ",", "}")
-    val perRepeat = perGate[Double](samples, s => f"$s%.3f")
-    val startOffsets = perGate[Double](starts, s => f"$s%.1f")
+    val startOffsets = qs.indices.map { i =>
+      "\"" + qs(i)._1 + "\":[" +
+        starts(i).map(s => f"$s%.1f").mkString(",") + "]"
+    }.mkString("{", ",", "}")
     val failedNames = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val detailLine = fullLine.dropRight(1) +
       s""","repeats":$repeats,"foreign_jvms":${foreign.size}""" +
       s""","failed_gates":$failedNames""" +
-      s""","samples":$perRepeat,"starts":$startOffsets""" +
-      s""","janino_compiles":${perGate[Long](janino, _.toString)}""" +
-      s""","jit_ms":${perGate[Long](jitMs, _.toString)}}"""
+      s""","samples":$perRepeat,"starts":$startOffsets}"""
     val outFile =
       if (filtered.isDefined) "bench_filtered.json" else "bench_full.json"
     try java.nio.file.Files.write(

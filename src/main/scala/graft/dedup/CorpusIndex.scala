@@ -129,20 +129,21 @@ object CorpusIndex {
     * assignment runs without code generation and comes back driver-held
     * (one row per batch doc): a bounded batch does too little work to
     * repay compiling its ~70 jobs' plans. Otherwise it returns lazily,
-    * with codegen, as before. */
+    * with codegen, as before. [[graft.tools.IncrementalScaleProbe]]
+    * times both postures as the index grows: at 4 cores codegen starts
+    * to win between 17 and 31 MB of summed estimate, above the default
+    * 10 MB threshold. */
   def assign(store: Store, prefix: String, batch: DataFrame,
       textCol: String, idCol: String, shingleSize: Int = 3,
       numHashes: Int = 32, bands: Int = 8, threshold: Double = 0.5,
       maxIter: Int = 20): DataFrame = {
+    checkMeta(store, prefix, shingleSize, numHashes, bands)
+    IndexCommits.validate(store, prefix, Seq("_exact", "_shingles", "_bands"))
     val exact = store.read(s"${prefix}_exact", exactSchema)
     val shingles = store.read(s"${prefix}_shingles", shingleSchema)
     val bandRows = store.read(s"${prefix}_bands", bandSchema)
-    def run = {
-      checkMeta(store, prefix, shingleSize, numHashes, bands)
-      IndexCommits.validate(store, prefix, Seq("_exact", "_shingles", "_bands"))
-      Dedup.assignAgainstIndexes(exact, shingles, bandRows, batch, textCol,
-        idCol, shingleSize, numHashes, bands, threshold, maxIter)
-    }
+    def run = Dedup.assignAgainstIndexes(exact, shingles, bandRows, batch,
+      textCol, idCol, shingleSize, numHashes, bands, threshold, maxIter)
     Checkpoints.interpretedIfFits(batch, exact, shingles, bandRows)(
       Checkpoints.toLocal(run)).getOrElse(run)
   }
@@ -158,12 +159,13 @@ object CorpusIndex {
     * at-least-once delivery).
     *
     * Runs without code generation when `accepted` fits the broadcast
-    * threshold, as [[assign]] does. */
+    * threshold, as [[assign]] does; derive it from the batch with a semi
+    * join, since a plain join's estimate is the product of its sides. */
   def append(store: Store, prefix: String, accepted: DataFrame,
       textCol: String, idCol: String, batchTag: String,
       shingleSize: Int = 3, numHashes: Int = 32, bands: Int = 8): Unit = {
+    checkMeta(store, prefix, shingleSize, numHashes, bands)
     def publish(): Unit = {
-      checkMeta(store, prefix, shingleSize, numHashes, bands)
       val (exact, rows) = indexRows(accepted, textCol, idCol, shingleSize)
       val r = rows.persist()
       FsUtils.publishBatch(exact, store.path(s"${prefix}_exact"), batchTag)

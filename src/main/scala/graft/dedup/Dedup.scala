@@ -546,8 +546,10 @@ object Dedup {
     * `cex(__h, cid)` exact-hash index, `cRows(id, h)` shingle-hash rows,
     * `cBand(cid, band, bsig)` MinHash band-signature index. Callers
     * either derive these from the corpus in-plan ([[incrementalNearDup]])
-    * or read them as persisted tables ([[CorpusIndex.assign]]). */
-  private[dedup] def assignAgainstIndexes(cexIn: => DataFrame,
+    * or read them as persisted tables ([[CorpusIndex.assign]]); the
+    * [[graft.tools.IncrementalScaleProbe]] times it in both codegen
+    * postures. */
+  private[graft] def assignAgainstIndexes(cexIn: => DataFrame,
       cRowsIn: => DataFrame, cBandIn: => DataFrame, batch: DataFrame,
       textCol: String, idCol: String,
       shingleSize: Int, numHashes: Int, bands: Int,

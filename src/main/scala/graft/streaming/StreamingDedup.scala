@@ -68,11 +68,13 @@ object StreamingDedup {
             shingleSize, numHashes, bands, threshold, maxIter)
             .transform(graft.pipeline.Checkpoints.stable)
           FsUtils.publishBatch(res, store.path(decisionsTable), tag)
-          // accepted new corpus members = novel self-representatives
+          // accepted new corpus members = novel self-representatives; a
+          // semi join keeps the size estimate at b's, so a batch that fits
+          // the broadcast threshold appends without codegen
           val accepted = b.join(
             res.filter(col("matched") === "novel"
                 && col("assigned") === col(idCol))
-              .select(idCol), Seq(idCol))
+              .select(idCol), Seq(idCol), "left_semi")
           CorpusIndex.append(store, prefix, accepted, textCol, idCol, tag,
             shingleSize, numHashes, bands)
           compactEvery.foreach { n =>

@@ -192,19 +192,23 @@ class CorpusIndexSpec extends AnyFunSuite {
     assert(e.getMessage.contains("was built with"))
   }
 
-  /** `body`'s result, the physical-plan node names of every SQL
-    * execution it starts (AQE re-plans included), and the Janino
-    * compiles it causes. */
-  private def traced[T](body: => T): (T, Seq[String], Long) = {
+  /** `body`'s result, the physical-plan node names of each SQL
+    * execution it starts (AQE re-plans included) with the plan's
+    * description, and the Janino compiles it causes. */
+  private def traced[T](body: => T): (T, Seq[(String, Seq[String])], Long) = {
     val sc = spark.sparkContext
-    val names = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    def walk(p: SparkPlanInfo): Unit = {
-      names.add(p.nodeName); p.children.foreach(walk)
-    }
+    val plans = new java.util.concurrent.ConcurrentHashMap[Long, (String, Seq[String])]()
+    def names(p: SparkPlanInfo): Seq[String] =
+      p.nodeName +: p.children.flatMap(names)
+    def add(id: Long, description: String, p: SparkPlanInfo): Unit =
+      plans.merge(id, (description, names(p)),
+        (a, b) => (a._1 + "\n" + b._1, a._2 ++ b._2))
     val listener = new SparkListener {
       override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case s: SparkListenerSQLExecutionStart => walk(s.sparkPlanInfo)
-        case u: SparkListenerSQLAdaptiveExecutionUpdate => walk(u.sparkPlanInfo)
+        case s: SparkListenerSQLExecutionStart =>
+          add(s.executionId, s.physicalPlanDescription, s.sparkPlanInfo)
+        case u: SparkListenerSQLAdaptiveExecutionUpdate =>
+          add(u.executionId, u.physicalPlanDescription, u.sparkPlanInfo)
         case _ =>
       }
     }
@@ -215,9 +219,12 @@ class CorpusIndexSpec extends AnyFunSuite {
       val c0 = compiles
       val out = body
       ListenerBusDrain(sc)
-      (out, names.asScala.toSeq, compiles - c0)
+      (out, plans.asScala.values.toSeq, compiles - c0)
     } finally sc.removeSparkListener(listener)
   }
+
+  private def codegen(plans: Iterable[Seq[String]]) =
+    plans.exists(_.exists(_.startsWith("WholeStageCodegen")))
 
   test("a batch within the broadcast threshold assigns without codegen; " +
       "at -1 it takes the lazy codegen path; rows are identical") {
@@ -238,20 +245,23 @@ class CorpusIndexSpec extends AnyFunSuite {
       (df, df.collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
         .toSeq.sorted)
     }
-    def codegen(plans: Seq[String]) = plans.exists(_.startsWith("WholeStageCodegen"))
     val key = "spark.sql.codegen.factoryMode"
     val before = spark.sessionState.conf.getAllConfs.get(key)
 
     val ((small, smallRows), smallPlans, smallCompiles) = traced(assign())
     assert(small.queryExecution.analyzed.isInstanceOf[LocalRelation])
-    assert(smallPlans.nonEmpty && !codegen(smallPlans), smallPlans.distinct)
+    // the parameter check reads c_meta before the gate, with codegen
+    val gated = smallPlans.filterNot(_._1.contains("/c_meta"))
+    assert(gated.size < smallPlans.size)
+    assert(gated.nonEmpty && !codegen(gated.map(_._2)),
+      gated.flatMap(_._2).distinct)
     assert(spark.sessionState.conf.getAllConfs.get(key) == before)
 
     val ((lazyDf, lazyRows), lazyPlans, lazyCompiles) =
       TestSpark.withConf("spark.sql.autoBroadcastJoinThreshold", "-1")(
         traced(assign()))
     assert(!lazyDf.queryExecution.analyzed.isInstanceOf[LocalRelation])
-    assert(codegen(lazyPlans), lazyPlans.distinct)
+    assert(codegen(lazyPlans.map(_._2)), lazyPlans.flatMap(_._2).distinct)
     assert(smallCompiles < lazyCompiles, s"$smallCompiles vs $lazyCompiles")
     info(s"Janino compiles: $smallCompiles within the threshold, $lazyCompiles at -1")
 
@@ -259,5 +269,31 @@ class CorpusIndexSpec extends AnyFunSuite {
     assert(smallRows.map(r => r._1 -> r._3).toMap ==
       Map(20L -> "exact", 21L -> "near", 22L -> "novel", 23L -> "novel"),
       smallRows)
+  }
+
+  test("a streaming ingest batch within the broadcast threshold appends " +
+      "without codegen") {
+    val st = store()
+    CorpusIndex.build(st, "c", corpus, "text", "doc_id")
+    // enough docs that an inner join of the batch with its decisions
+    // would be estimated (product of the sides) past the threshold
+    val docs = (0 until 200).map(i =>
+      (100L + i, s"streamed doc $i carries words w$i x${i * 7} y${i * 13}"))
+      .toDF("doc_id", "text")
+    docs.coalesce(1).write.parquet(st.path("landing"))
+    val (_, plans, _) = traced(graft.streaming.StreamingDedup.corpusIngest(
+      spark, st.path("landing"), docs.schema, st, "c", st.path("ck"),
+      "text", "doc_id", threshold = 0.5).awaitTermination())
+    val appends = plans.filter { case (description, _) =>
+      Seq("c_exact", "c_shingles", "c_bands")
+        .exists(t => description.contains(s"/$t/.staging_batch_0"))
+    }
+    assert(appends.size == 3, plans.map(_._1).mkString("\n---\n"))
+    assert(!codegen(appends.map(_._2)), appends.flatMap(_._2).distinct)
+    val accepted = spark.read.parquet(st.path("decisions"))
+      .filter(col("matched") === "novel" && col("assigned") === col("doc_id"))
+      .count()
+    assert(accepted > 0)
+    assert(spark.read.parquet(st.path("c_exact")).count() == 3 + accepted)
   }
 }
