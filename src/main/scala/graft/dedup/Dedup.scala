@@ -1,7 +1,8 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType}
 
 import graft.functions.{Text, Vectors}
 
@@ -315,11 +316,11 @@ object Dedup {
     * fraction of the corpus at any scale. Returns (id, label) for every
     * edge-touched node; callers re-attach isolated nodes with label =
     * own id (one left join, no iteration cost). Dedup clusters have tiny
-    * diameters, so convergence exits early; `maxIter` bounds the joins,
-    * each iteration lineage-truncated. A non-converged exit (a chain
-    * longer than maxIter hops) yields a consistent but possibly
-    * non-minimal labeling — the differential gates compute the TRUE
-    * closure in the oracle, so such a divergence fails loudly there.
+    * diameters, so convergence exits early; `maxIter` bounds the sweeps.
+    * A non-converged exit (a chain longer than maxIter hops) yields a
+    * consistent but possibly non-minimal labeling — the differential
+    * gates compute the TRUE closure in the oracle, so such a divergence
+    * fails loudly there.
     *
     * Returns (labels, converged). Convergence is determined exactly: if
     * the sweep budget runs out before a fixed point was OBSERVED, one
@@ -328,8 +329,85 @@ object Dedup {
     * maxIter = 1 on a single edge — reports converged = true rather
     * than unknown. Returned explicitly (not via any side channel) so
     * interleaved calls on one thread can't clobber each other's
-    * status. */
+    * status.
+    *
+    * Two sides run the same sweeps and return the same labels, schema
+    * and flag for every graph, converged or not. The first action
+    * collects at most `bound + 1` edges, `bound` being the edges that
+    * fit [[graft.pipeline.Checkpoints.driverBytes]] at 16 bytes each;
+    * that collect also answers emptiness. When at most `bound` came
+    * back, both id columns are `long` or both `int`, and no id is null,
+    * the sweeps run over arrays on the driver ([[minLabelsOnDriver]])
+    * and the labels are a `LocalRelation`: the few thousand edges of a
+    * near-dup closure otherwise pay a checkpoint job and a probe job per
+    * sweep for milliseconds of work. Otherwise they run as checkpointed
+    * Spark jobs ([[propagateOnSpark]]). */
   private[graft] def propagateMinLabels(edges: DataFrame,
+      maxIter: Int): (DataFrame, Boolean) = {
+    val e = edges.toDF("id_a", "id_b")
+    val undirected = e.union(e.select(col("id_b"), col("id_a")))
+      .toDF("id", "nbr")
+    val schema = undirected.select(col("id"), col("id").as("label")).schema
+    val spark = e.sparkSession
+    def local(rows: Seq[Row]) =
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    val threshold = graft.pipeline.Checkpoints.driverBytes(spark)
+    val bound = if (threshold < 0) 0
+      else math.min(threshold / 16, Int.MaxValue - 1L).toInt
+    val head = e.limit(bound + 1).collect()
+    if (head.isEmpty) // empty graph is trivially converged
+      return (local(Nil), true)
+    val idTypes = e.schema.fields.map(_.dataType).toSet
+    if (head.length > bound ||
+        (idTypes != Set(LongType) && idTypes != Set(IntegerType)) ||
+        head.exists(r => r.isNullAt(0) || r.isNullAt(1)))
+      return propagateOnSpark(
+        undirected.transform(graft.pipeline.Checkpoints.stable), maxIter)
+    def ids(k: Int) = head.map(_.get(k).asInstanceOf[Number].longValue)
+    val (nodes, labels, converged) = minLabelsOnDriver(ids(0), ids(1), maxIter)
+    val asId: Long => Any =
+      if (idTypes == Set(LongType)) identity else _.toInt
+    (local(nodes.indices.map(k => Row(asId(nodes(k)), asId(labels(k))))),
+      converged)
+  }
+
+  /** [[propagateMinLabels]]' sweeps over arrays of directed edges
+    * (a(k), b(k)): the same synchronous updates — sweep 1 is
+    * least(id, min(nbr)), then up to maxIter - 1 probed sweeps, then the
+    * budget-exhausted final probe. Returns the sorted distinct endpoints,
+    * the label of each, and the flag. Nodes are numbered in id order, so
+    * the minimum of their numbers is the number of the minimum id. */
+  private def minLabelsOnDriver(a: Array[Long], b: Array[Long],
+      maxIter: Int): (Array[Long], Array[Long], Boolean) = {
+    val nodes = (a ++ b).distinct.sorted
+    val u = a.map(java.util.Arrays.binarySearch(nodes, _))
+    val v = b.map(java.util.Arrays.binarySearch(nodes, _))
+    def sweep(label: Array[Int]): Array[Int] = {
+      val next = label.clone()
+      var k = 0
+      while (k < u.length) {
+        next(u(k)) = math.min(next(u(k)), label(v(k)))
+        next(v(k)) = math.min(next(v(k)), label(u(k)))
+        k += 1
+      }
+      next
+    }
+    var label = sweep(Array.range(0, nodes.length))
+    var converged = false // sweep 1 is not probed, as on Spark
+    var i = 1
+    while (i < maxIter && !converged) {
+      val next = sweep(label)
+      converged = java.util.Arrays.equals(next, label)
+      label = next
+      i += 1
+    }
+    if (!converged) converged = java.util.Arrays.equals(sweep(label), label)
+    (nodes, label.map(nodes(_)), converged)
+  }
+
+  /** [[propagateMinLabels]]' sweeps as Spark jobs over the checkpointed
+    * undirected edge list (id, nbr), which has at least one row. */
+  private def propagateOnSpark(undirected: DataFrame,
       maxIter: Int): (DataFrame, Boolean) = {
     // EAGER checkpoints throughout the loop, by measurement: each
     // iteration references `labels` twice, so any non-truncating reuse
@@ -338,16 +416,8 @@ object Dedup {
     // before any executor ran. localCheckpoint cuts the plan to a
     // LogicalRDD leaf; the per-iteration convergence probe then scans the
     // just-materialized blocks (milliseconds, vs a recompute).
-    // One checkpoint covers both union branches (the shared pairs
-    // subtree is AQE-stage-reused) and doubles as the fast-path probe:
-    // no edges → no labels to propagate (common for small incremental
-    // batches). limit(0) keeps the caller's id type.
-    val e = edges.toDF("id_a", "id_b")
-    val undirected = e.union(e.select(col("id_b"), col("id_a")))
-      .toDF("id", "nbr").transform(graft.pipeline.Checkpoints.stable)
-    if (undirected.isEmpty) // empty graph is trivially converged
-      return (undirected.select(col("id"), col("id").as("label")).limit(0),
-        true)
+    // The caller's one checkpoint of `undirected` covers both union
+    // branches (the shared pairs subtree is AQE-stage-reused).
     // Sweep 1 needs no labels frame — every node starts labeled by its
     // own id, so the first propagation is least(id, min(nbr)) straight
     // off the edge list (saves the identity-labels checkpoint plus one
@@ -654,8 +724,8 @@ object Dedup {
     // batch-local closure over what matched nothing. Not checkpointed —
     // every consumer re-derives it from materialized leaves; the former
     // novel.isEmpty pre-probe is gone (one fewer barrier) because
-    // propagateMinLabels' own empty-edge probe short-circuits the loop,
-    // and the edge work it guarded already ran concurrently in wave 2.
+    // propagateMinLabels' first collect answers emptiness, and the edge
+    // work it guarded already ran concurrently in wave 2.
     val rem = repDocs.join(repExact.select("id"), Seq("id"), "left_anti")
     val novel = rem.join(near.select(col("bid").as("id")), Seq("id"),
       "left_anti")

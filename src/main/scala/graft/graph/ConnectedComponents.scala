@@ -5,11 +5,14 @@ import org.apache.spark.sql.DataFrame
 /** First-class graph primitive: weakly-connected components by bounded
   * iterative min-label propagation — each sweep joins current labels to
   * the undirected edge list and takes the per-node minimum, converging
-  * in O(component diameter) sweeps of one hash shuffle each (the
-  * label-propagation cousin of large-star/small-star; real-world
-  * near-dup / identity graphs have tiny diameters, so 3-4 sweeps is
-  * typical). Eager per-sweep checkpoints keep the logical plan from
-  * doubling per iteration and make the convergence probe a scan.
+  * in O(component diameter) sweeps (the label-propagation cousin of
+  * large-star/small-star; real-world near-dup / identity graphs have
+  * tiny diameters, so 3-4 sweeps is typical). An edge list that fits
+  * `spark.sql.autoBroadcastJoinThreshold` at 16 bytes an edge is
+  * collected once and swept on the driver; a larger one sweeps as Spark
+  * jobs, each a join and aggregate behind an eager checkpoint that keeps
+  * the logical plan from doubling per iteration and makes the
+  * convergence probe a scan. Both give the same labels.
   *
   * This same core drives every near-dup group closure in the engine
   * ([[graft.dedup.Dedup.propagateMinLabels]]); exposed here as a public

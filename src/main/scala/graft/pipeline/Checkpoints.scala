@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.internal.SQLConf
 
 /** Reliability posture for the engine's eager checkpoint sites (round-19
@@ -55,14 +55,20 @@ object Checkpoints {
       df.checkpoint()
     }
 
+  /** `spark.sql.autoBroadcastJoinThreshold`: the bytes up to which a
+    * frame is held on the driver or run interpreted here, and up to which
+    * [[graft.dedup.Dedup.propagateMinLabels]] runs its closure on the
+    * driver; -1 turns all of them off. */
+  def driverBytes(spark: SparkSession): Long =
+    spark.sessionState.conf.autoBroadcastJoinThreshold
+
   /** Whether the summed pre-execution size estimates of `frames` (file
     * bytes and plan statistics, the figure broadcast planning reads) are
     * at most `spark.sql.autoBroadcastJoinThreshold`; never when the
     * threshold is -1. Non-CBO estimates of joins are products of their
     * inputs, so pass leaves, or frames whose top join is a semi join. */
   private def fits(frames: Seq[DataFrame]): Boolean = {
-    val threshold =
-      frames.head.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val threshold = driverBytes(frames.head.sparkSession)
     threshold >= 0 &&
       frames.map(_.queryExecution.optimizedPlan.stats.sizeInBytes).sum <=
         threshold
