@@ -3,7 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
-import graft.pipeline.Store
+import graft.pipeline.{Checkpoints, Store}
 import graft.schema.Schemas
 
 /** The SQL-text entry point (SURVEY.md §3 E3(a)): the reference's users
@@ -13,6 +13,11 @@ import graft.schema.Schemas
   * temp views — Catalyst parses, analyzes, optimizes and plans them
   * exactly like the DataFrame surface (both lower to the same logical
   * operators, so broadcast dims / partition pruning apply unchanged).
+  * When the registered tables together fit the broadcast threshold, the
+  * text runs without code generation and its result comes back held on
+  * the driver, up to the row cap of
+  * [[Checkpoints.localInterpretedIfFits]]; a larger result, or larger
+  * tables, return lazily with codegen.
   */
 object SqlSurface {
 
@@ -31,11 +36,15 @@ object SqlSurface {
     * returns — a later re-registration (another store, another dir)
     * cannot retroactively change it. */
   def sql(spark: SparkSession, store: Store, query: String,
-      tables: Map[String, StructType] = defaultTables): DataFrame =
-    SqlSurface.synchronized {
-      tables.foreach { case (name, schema) =>
-        store.read(name, schema).createOrReplaceTempView(name)
+      tables: Map[String, StructType] = defaultTables): DataFrame = {
+    val (frames, result) = SqlSurface.synchronized {
+      val frames = tables.toSeq.map { case (name, schema) =>
+        val df = store.read(name, schema)
+        df.createOrReplaceTempView(name)
+        df
       }
-      spark.sql(query)
+      (frames, spark.sql(query))
     }
+    Checkpoints.localInterpretedIfFits(frames: _*)(result)
+  }
 }

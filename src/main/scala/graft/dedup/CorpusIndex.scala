@@ -125,7 +125,7 @@ object CorpusIndex {
     * else LSH-verified near match, else batch-local novel closure).
     *
     * When the batch and the three index tables together fit the
-    * broadcast threshold ([[Checkpoints.interpretedIfFits]]) the
+    * broadcast threshold ([[Checkpoints.localInterpretedIfFits]]) the
     * assignment runs without code generation and comes back driver-held
     * (one row per batch doc): a bounded batch does too little work to
     * repay compiling its ~70 jobs' plans. Otherwise it returns lazily,
@@ -142,10 +142,9 @@ object CorpusIndex {
     val exact = store.read(s"${prefix}_exact", exactSchema)
     val shingles = store.read(s"${prefix}_shingles", shingleSchema)
     val bandRows = store.read(s"${prefix}_bands", bandSchema)
-    def run = Dedup.assignAgainstIndexes(exact, shingles, bandRows, batch,
-      textCol, idCol, shingleSize, numHashes, bands, threshold, maxIter)
-    Checkpoints.interpretedIfFits(batch, exact, shingles, bandRows)(
-      Checkpoints.toLocal(run)).getOrElse(run)
+    Checkpoints.localInterpretedIfFits(batch, exact, shingles, bandRows)(
+      Dedup.assignAgainstIndexes(exact, shingles, bandRows, batch, textCol,
+        idCol, shingleSize, numHashes, bands, threshold, maxIter))
   }
 
   /** Append accepted new corpus members (novel self-representatives of an

@@ -565,7 +565,15 @@ object ParseOps {
     .empty[(SparkSession, String), (graft.pipeline.Store, String)]
 
   def refTrackExtraction(spark: SparkSession, dir: String): DataFrame = {
-    val (store, firstId) = storeCache.getOrElseUpdate((spark, dir), {
+    val (store, firstId) = refStore(spark, dir)
+    graft.analytics.ReferenceQueries.trackExtraction(spark, store, firstId)
+  }
+
+  /** The memoized store and its first storm id: the fixture the `q_ref_*`
+    * gates and [[refSqlSurface]] query. */
+  private def refStore(spark: SparkSession,
+      dir: String): (graft.pipeline.Store, String) =
+    storeCache.getOrElseUpdate((spark, dir), {
       val steps = AtcfParser.forecastSteps(
           AtcfParser.parseADeck(adeckLines(spark, dir)))
         .withColumn("nhc_id", graft.functions.Atcf.nhcId(
@@ -605,43 +613,33 @@ object ParseOps {
       val firstId = written.agg(min("nhc_id")).first().getString(0)
       (store, firstId)
     })
-    graft.analytics.ReferenceQueries.trackExtraction(spark, store, firstId)
-  }
 
   /** db/basin_model_counts.sql:1-13 over the pipeline-built store —
     * tracks per model within basin AL (the reference's own literal). */
-  def refBasinModelCounts(spark: SparkSession, dir: String): DataFrame = {
-    refTrackExtraction(spark, dir) // ensure the memoized store exists
+  def refBasinModelCounts(spark: SparkSession, dir: String): DataFrame =
     graft.analytics.ReferenceQueries
-      .basinModelCounts(spark, storeCache((spark, dir))._1, "AL")
-  }
+      .basinModelCounts(spark, refStore(spark, dir)._1, "AL")
 
   /** db/model_counts_by_basin.sql:1-12 — forecasts per basin for one
     * model. The reference's literal is 'HWRF'; the a-deck fixture only
     * emits AVNO/GFSO (ok%4<2 keys), so the gate binds 'GFSO' to keep the
     * differential non-vacuous. */
-  def refModelCountsByBasin(spark: SparkSession, dir: String): DataFrame = {
-    refTrackExtraction(spark, dir)
+  def refModelCountsByBasin(spark: SparkSession, dir: String): DataFrame =
     graft.analytics.ReferenceQueries
-      .modelCountsByBasin(spark, storeCache((spark, dir))._1, "GFSO")
-  }
+      .modelCountsByBasin(spark, refStore(spark, dir)._1, "GFSO")
 
   /** db/basin_track_counts_by_model.sql — forecasts per model in WP. */
   def refBasinTrackCountsByModel(spark: SparkSession,
-      dir: String): DataFrame = {
-    refTrackExtraction(spark, dir)
+      dir: String): DataFrame =
     graft.analytics.ReferenceQueries
-      .basinTrackCountsByModel(spark, storeCache((spark, dir))._1, "WP")
-  }
+      .basinTrackCountsByModel(spark, refStore(spark, dir)._1, "WP")
 
   /** db/storm_track_counts_by_model.sql:12-15 — tracks per (storm,
     * model) in WP with the storm-name join. */
   def refStormTrackCountsByModel(spark: SparkSession,
-      dir: String): DataFrame = {
-    refTrackExtraction(spark, dir)
+      dir: String): DataFrame =
     graft.analytics.ReferenceQueries
-      .stormTrackCountsByModel(spark, storeCache((spark, dir))._1, "WP")
-  }
+      .stormTrackCountsByModel(spark, refStore(spark, dir)._1, "WP")
 
   /** E3(a) SQL-text surface — db/track_queries.sql:16-25 as LITERAL SQL
     * through `spark.sql` over the Store tables registered as temp views
@@ -653,8 +651,7 @@ object ParseOps {
     * one proves the declared SQL-text lifecycle — text → Catalyst
     * parse/analyze/optimize → rows — over the same store. */
   def refSqlSurface(spark: SparkSession, dir: String): DataFrame = {
-    refTrackExtraction(spark, dir) // ensure the memoized store exists
-    val (store, _) = storeCache((spark, dir))
+    val (store, _) = refStore(spark, dir)
     // the storm id is itself SQL (scalar subquery) — the whole gate is
     // one self-contained text, like the reference's .sql files; AVNO
     // scopes the pick because each fixture file carries a single model

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.graftshim.Shims
 import org.apache.spark.sql.internal.SQLConf
 
 /** Reliability posture for the engine's eager checkpoint sites (round-19
@@ -38,7 +39,15 @@ import org.apache.spark.sql.internal.SQLConf
   * [[interpretedIfFits]] is the matching posture for code generation: a
   * body whose inputs fit the same threshold runs without Janino, since
   * compiling its plans costs more CPU than the compiled code saves on
-  * inputs that small.
+  * inputs that small. The cron cycles (`Pipelines.runBdeck`,
+  * `Pipelines.runAdeckLines`, `Maintenance.archiveStale`) run their bodies
+  * under it. [[localInterpretedIfFits]] is the read-side form: a query
+  * over inputs that fit is run under the posture and returned driver-held,
+  * so the caller's own actions on it run no job and no whole-stage code.
+  * The store's analyst reads (`ReferenceQueries`, `StormDataset.assemble`,
+  * `SqlSurface.sql`) and `CorpusIndex.assign` return through it. Running
+  * only the writes interpreted would move the Janino warm-up into the
+  * reads that follow them.
   */
 object Checkpoints {
   private def reliable: Boolean =
@@ -112,6 +121,25 @@ object Checkpoints {
         }
       }
     }
+
+  /** `result`, run under [[interpretedIfFits]] of `inputs` and held on the
+    * driver as a `LocalRelation`, when `inputs` fit and `result` has at
+    * most one row per `defaultSize` bytes of the threshold; otherwise
+    * `result` lazy, with codegen. Pass the frames `result` is built from
+    * (the leaves it reads), not fresh reads of them: the check costs no
+    * extra file listing. The row cap bounds what the driver holds, since a
+    * join's output is not bounded by the size of its inputs; the rows of a
+    * result over the cap are not kept, and the frame comes back lazy. */
+  def localInterpretedIfFits(inputs: DataFrame*)(
+      result: => DataFrame): DataFrame =
+    interpretedIfFits(inputs: _*) {
+      val df = result
+      val cap = math.min(Int.MaxValue - 1L,
+        driverBytes(df.sparkSession) / math.max(1, df.schema.defaultSize))
+      Shims.collectUpTo(df, cap.toInt).getOrElse(
+        // a fresh plan: `df`'s physical plan was made without codegen
+        Shims.ofRows(df.sparkSession, df.queryExecution.analyzed))
+    }.getOrElse(result)
 
   /** Per session conf: the [[interpretedIfFits]] scopes open on it, and
     * the caller's `factoryMode` the last of them restores. */

@@ -14,20 +14,27 @@ import graft.schema.Schemas
 object Maintenance {
 
   /** routines.py:14-31 — flip storms to Archive when their newest
-    * observation is older than `hours` (default 24). */
+    * observation is older than `hours` (default 24). Runs without code
+    * generation when both tables fit the broadcast threshold, as the cron
+    * cycles do ([[Pipelines]]). */
   def archiveStale(store: Store, now: Timestamp, hours: Int = 24): Unit = {
     val storms = store.read("storms", Schemas.storms)
-    val lastObs = store.read("observations", Schemas.observations)
-      .groupBy("nhc_id").agg(max("datetime_utc").as("last_obs"))
-    val updated = storms.join(lastObs, Seq("nhc_id"), "left_outer")
-      .withColumn("status",
-        when(col("status") === "Active" &&
-            coalesce(col("last_obs"), col("end_date")) <
-              lit(now) - expr(s"interval $hours hours"), "Archive")
-          .otherwise(col("status")))
-      .drop("last_obs")
-    // no seam: the staged write reads the table before replacing it
-    store.write("storms", updated)
+    val observations = store.read("observations", Schemas.observations)
+    def archive(): Unit = {
+      val lastObs = observations
+        .groupBy("nhc_id").agg(max("datetime_utc").as("last_obs"))
+      val updated = storms.join(lastObs, Seq("nhc_id"), "left_outer")
+        .withColumn("status",
+          when(col("status") === "Active" &&
+              coalesce(col("last_obs"), col("end_date")) <
+                lit(now) - expr(s"interval $hours hours"), "Archive")
+            .otherwise(col("status")))
+        .drop("last_obs")
+      // no seam: the staged write reads the table before replacing it
+      store.write("storms", updated)
+    }
+    Checkpoints.interpretedIfFits(storms, observations)(archive())
+      .getOrElse(archive())
   }
 
   /** routines.py:33-63 — delete invests (nhc_number >= 90) whose last

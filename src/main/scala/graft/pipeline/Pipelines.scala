@@ -19,9 +19,14 @@ import graft.schema.Schemas
   * `session.flush()` surrogate-id choreography disappears because every
   * table is keyed by its natural key (SURVEY.md §7.3).
   *
-  * The cycles keep Spark's code generation ([[Checkpoints.interpretedIfFits]]
-  * is not applied): run interpreted, a cycle's ingest CPU halves, but the
-  * analyst reads that follow it then pay the Janino warm-up instead.
+  * A cycle whose landing lines and the store tables it reads fit the
+  * broadcast threshold runs without code generation
+  * ([[Checkpoints.interpretedIfFits]]): a cron cycle's few thousand lines
+  * cost less to interpret than to compile. Larger inputs keep Spark's
+  * code generation. The analyst reads take the same posture
+  * ([[Checkpoints.localInterpretedIfFits]]), so the Janino warm-up does
+  * not move into them. Each cycle reads its tables once, up front, and
+  * the size check reuses those frames.
   */
 object Pipelines {
 
@@ -33,13 +38,22 @@ object Pipelines {
     * etl/process_obs.py). */
   def runBdeck(spark: SparkSession, landing: String, store: Store,
       now: Timestamp): Unit = {
+    val lines = AtcfParser.readDeckLines(spark, landing)
+    val existing = store.read("storms", Schemas.storms)
+    val observations = store.read("observations", Schemas.observations)
+    def cycle(): Unit = bdeckCycle(lines, existing, observations, store, now)
+    Checkpoints.interpretedIfFits(lines, existing, observations)(cycle())
+      .getOrElse(cycle())
+  }
+
+  private def bdeckCycle(lines: DataFrame, existing: DataFrame,
+      observations: DataFrame, store: Store, now: Timestamp): Unit = {
     val rid = runId("STORMS", now)
-    val bdeck = AtcfParser.parseBDeck(AtcfParser.readDeckLines(spark, landing))
+    val bdeck = AtcfParser.parseBDeck(lines)
 
     // one row per landed file: held on the driver once and shared by the
     // resolver and the observations' file keys
     val summaries = Checkpoints.toLocal(AtcfParser.stormSummaries(bdeck))
-    val existing = store.read("storms", Schemas.storms)
     val storms = StormResolver.resolve(existing, summaries, now, rid)
       .withColumn("last_update", lit(now))
     store.write("storms", storms)
@@ -56,8 +70,7 @@ object Pipelines {
       .join(stormKeys, Seq("nhc_id", "start_date"), "left_semi")
       .drop("file")
       .withColumn("run_id", lit(obsRid))
-    val merged = Merge.upsert(
-      store.read("observations", Schemas.observations),
+    val merged = Merge.upsert(observations,
       incoming.select(Schemas.observations.fieldNames.map(col).toIndexedSeq: _*),
       keys = Seq("nhc_id", "start_date", "datetime_utc"))
     store.write("observations", merged)
@@ -77,6 +90,20 @@ object Pipelines {
   def runAdeckLines(lines: DataFrame, store: Store,
       now: Timestamp, allowedModels: Seq[String],
       recencyHours: Option[Int] = Some(48)): Unit = {
+    val storms = store.read("storms", Schemas.storms)
+    val forecasts = store.read("forecasts", Schemas.forecasts)
+    val tracks = store.read("tracks", Schemas.tracks)
+    val steps = store.read("steps", Schemas.steps)
+    def cycle(): Unit = adeckCycle(lines, storms, forecasts, tracks, steps,
+      store, now, allowedModels, recencyHours)
+    Checkpoints.interpretedIfFits(lines, storms, forecasts, tracks, steps)(
+      cycle()).getOrElse(cycle())
+  }
+
+  private def adeckCycle(lines: DataFrame, storms: DataFrame,
+      forecastsIn: DataFrame, tracksIn: DataFrame, stepsIn: DataFrame,
+      store: Store, now: Timestamp, allowedModels: Seq[String],
+      recencyHours: Option[Int]): Unit = {
     val rid = runId("ADECK", now)
     val adeck = AtcfParser.parseADeck(lines)
       .filter(col("tech").isin(allowedModels: _*)) // P2 allowlist
@@ -96,7 +123,7 @@ object Pipelines {
       // (tcdb/models/database.py:26-66, adeck.py:155-160)
       .withColumn("nhc_id", graft.functions.Atcf.nhcId(
         col("region"), col("nhc_number"), col("season")))
-      .join(store.read("storms", Schemas.storms).select("nhc_id"),
+      .join(storms.select("nhc_id"),
         Seq("nhc_id"), "left_semi"))
 
     val org = when(lower(col("region")).isin("al", "ep", "cp"), "NHC")
@@ -106,8 +133,7 @@ object Pipelines {
         col("datetime_utc"))
       .distinct()
       .withColumn("run_id", lit(rid))
-    store.write("forecasts", Merge.upsert(
-      store.read("forecasts", Schemas.forecasts), forecasts,
+    store.write("forecasts", Merge.upsert(forecastsIn, forecasts,
       keys = Seq("region", "data_source", "model", "datetime_utc")))
 
     // a-deck tracks are the deterministic member (ensemble_number=1,
@@ -117,16 +143,14 @@ object Pipelines {
       .distinct()
       .withColumn("ensemble_number", lit(1))
       .withColumn("run_id", lit(rid))
-    store.write("tracks", Merge.upsert(
-      store.read("tracks", Schemas.tracks), tracks,
+    store.write("tracks", Merge.upsert(tracksIn, tracks,
       keys = Seq("region", "model", "datetime_utc", "nhc_id", "ensemble_number")))
 
     val stepRows = steps
       .withColumn("ensemble_number", lit(1))
       .withColumn("run_id", lit(rid))
       .select(Schemas.steps.fieldNames.map(col).toIndexedSeq: _*)
-    store.write("steps", Merge.upsert(
-      store.read("steps", Schemas.steps), stepRows,
+    store.write("steps", Merge.upsert(stepsIn, stepRows,
       keys = Seq("region", "model", "datetime_utc", "nhc_id",
         "ensemble_number", "hour")))
   }

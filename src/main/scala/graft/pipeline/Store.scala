@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** Parquet-backed table store for the pipeline outputs.
@@ -31,8 +31,13 @@ final class Store(spark: SparkSession, root: String) {
       // one marker-existence check when nothing is pending)
       recoverCompact(table)
       spark.read.schema(schema).parquet(path(table))
-    } else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    } else empty(schema)
+
+  /** No rows, as a local relation: Spark estimates it at 0 bytes, so a
+    * missing table fits every size gate (an empty RDD-backed frame would
+    * be estimated at `spark.sql.defaultSizeInBytes`, i.e. as huge). */
+  private def empty(schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
 
   /** Time-travel read over a BATCH-PUBLISHED table
     * ([[FsUtils.publishBatch]] drops `batch_<tag>_p*.parquet` per
@@ -63,10 +68,8 @@ final class Store(spark: SparkSession, root: String) {
 
   private def readTagRange(table: String, schema: StructType,
       after: Option[String], upTo: String): DataFrame = {
-    def empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     val dir = new java.io.File(path(table))
-    if (!dir.exists()) return empty
+    if (!dir.exists()) return empty(schema)
     recoverCompact(table)
     val files = Option(dir.listFiles()).getOrElse(Array.empty)
       .filter(_.getName.endsWith(".parquet"))
@@ -104,7 +107,7 @@ final class Store(spark: SparkSession, root: String) {
         val t = m.group(1)
         leq(t, upTo) && after.forall(a => !leq(t, a))
       })
-    if (keep.isEmpty) empty
+    if (keep.isEmpty) empty(schema)
     else spark.read.schema(schema).parquet(keep.map(_.getPath).toSeq: _*)
   }
 

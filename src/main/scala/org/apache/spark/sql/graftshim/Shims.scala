@@ -2,8 +2,10 @@ package org.apache.spark.sql.graftshim
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.{LocalTableScanExec, SQLExecution}
 
 /** Bridge to the `private[sql]` Expression<->Column and
   * LogicalPlan<->DataFrame converters — the standard extension-point shim
@@ -28,4 +30,22 @@ object Shims {
 
   /** The analyzed logical plan of a DataFrame (resolved attributes). */
   def analyzedPlan(df: DataFrame): LogicalPlan = df.queryExecution.analyzed
+
+  /** `df`'s rows held on the driver as a `LocalRelation`, or `None` when
+    * it has more than `cap` rows. One action over `df`'s own physical
+    * plan, so it runs the jobs a `collect` would; each partition stops
+    * after `cap + 1` rows, so an unbounded result is not materialized. */
+  def collectUpTo(df: DataFrame, cap: Int): Option[DataFrame] = {
+    val qe = df.queryExecution
+    val rows = SQLExecution.withNewExecutionId(qe, Some("collect")) {
+      qe.executedPlan match {
+        case local: LocalTableScanExec => local.executeCollect()
+        case plan => plan.execute()
+          .mapPartitions(_.take(cap + 1).map(_.copy())).collect()
+      }
+    }
+    if (rows.length > cap) None
+    else Some(ofRows(df.sparkSession,
+      LocalRelation(DataTypeUtils.toAttributes(df.schema), rows.toSeq)))
+  }
 }

@@ -3,9 +3,12 @@ package graft.analytics
 import java.nio.file.Files
 import java.sql.Timestamp
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.datasets.StormDataset
 import graft.parse.Fixtures
 import graft.pipeline.{Pipelines, Store}
 
@@ -87,6 +90,64 @@ class ReferenceQueriesSpec extends AnyFunSuite {
     assert(out.map(_.getAs[Int]("hour")).toSeq == Seq(0, 12))
     assert(out.forall(_.getAs[String]("name") == "HU-Ian"))
     assert(out.forall(_.getAs[Int]("annual_id") == 1))
+  }
+
+  private def held(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.isInstanceOf[LocalRelation]
+
+  private def rows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
+
+  test("every read returns the same rows held on the driver at the " +
+      "default threshold and lazy at -1") {
+    // (whether the frame is held, its rows), collected at the threshold
+    def reads(): Seq[(String, (Boolean, Seq[String]))] = {
+      val ds = StormDataset.assemble(spark, store, "AL092022")
+      Seq(
+        "basinModelCounts" -> ReferenceQueries.basinModelCounts(spark, store, "AL"),
+        "basinTrackCountsByModel" ->
+          ReferenceQueries.basinTrackCountsByModel(spark, store, "AL"),
+        "modelCountsByBasin" ->
+          ReferenceQueries.modelCountsByBasin(spark, store, "HWRF"),
+        "stormTrackCountsByModel" ->
+          ReferenceQueries.stormTrackCountsByModel(spark, store, "AL"),
+        "trackExtraction" ->
+          ReferenceQueries.trackExtraction(spark, store, "AL092022"),
+        "assemble.storm" -> ds.storm,
+        "assemble.forecastTable" -> ds.forecastTable,
+        "assemble.obsTable" -> ds.obsTable,
+        "sql" -> SqlSurface.sql(spark, store,
+          """SELECT s.status, count(*) AS n FROM storms s JOIN observations o
+            |ON s.nhc_id = o.nhc_id AND s.start_date = o.start_date
+            |GROUP BY s.status ORDER BY s.status""".stripMargin))
+        .map { case (name, df) => name -> (held(df), rows(df)) }
+    }
+    val atDefault = reads()
+    val atMinus1 = TestSpark.withConf(
+      "spark.sql.autoBroadcastJoinThreshold", "-1")(reads())
+    atDefault.zip(atMinus1).foreach { case ((name, (h, r)), (_, (l, lr))) =>
+      assert(h && !l, s"$name: held $h at the default, $l at -1")
+      assert(r.nonEmpty && r == lr, s"$name: $r vs $lr")
+    }
+  }
+
+  test("a SqlSurface result over the row cap comes back lazy with the " +
+      "same rows") {
+    // 256 KiB holds the store's tables, and at most 9,362 rows of
+    // (string, bigint), whose defaultSize is 28 bytes
+    def cross(n: Int) = SqlSurface.sql(spark, store,
+      s"SELECT s.nhc_id, r.id FROM storms s CROSS JOIN range($n) r")
+    val (over, under) = TestSpark.withConf(
+      "spark.sql.autoBroadcastJoinThreshold", (256 * 1024).toString) {
+      val o = cross(20000)
+      val u = cross(9000)
+      (held(o) -> rows(o), held(u) -> rows(u))
+    }
+    assert(!over._1 && under._1)
+    assert(over._2.size == 20000)
+    assert(over._2 == TestSpark.withConf(
+      "spark.sql.autoBroadcastJoinThreshold", "-1")(rows(cross(20000))))
+    assert(under._2 == rows(cross(9000)))
   }
 
   test("dimension seeds match the reference DDL") {

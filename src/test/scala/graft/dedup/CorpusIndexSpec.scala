@@ -1,14 +1,7 @@
 package graft.dedup
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-import org.apache.spark.sql.execution.SparkPlanInfo
-import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -192,39 +185,14 @@ class CorpusIndexSpec extends AnyFunSuite {
     assert(e.getMessage.contains("was built with"))
   }
 
-  /** `body`'s result, the physical-plan node names of each SQL
-    * execution it starts (AQE re-plans included) with the plan's
-    * description, and the Janino compiles it causes. */
+  /** `body`'s result, the plans of the SQL executions it starts and the
+    * Janino compiles it causes. */
   private def traced[T](body: => T): (T, Seq[(String, Seq[String])], Long) = {
-    val sc = spark.sparkContext
-    val plans = new java.util.concurrent.ConcurrentHashMap[Long, (String, Seq[String])]()
-    def names(p: SparkPlanInfo): Seq[String] =
-      p.nodeName +: p.children.flatMap(names)
-    def add(id: Long, description: String, p: SparkPlanInfo): Unit =
-      plans.merge(id, (description, names(p)),
-        (a, b) => (a._1 + "\n" + b._1, a._2 ++ b._2))
-    val listener = new SparkListener {
-      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case s: SparkListenerSQLExecutionStart =>
-          add(s.executionId, s.physicalPlanDescription, s.sparkPlanInfo)
-        case u: SparkListenerSQLAdaptiveExecutionUpdate =>
-          add(u.executionId, u.physicalPlanDescription, u.sparkPlanInfo)
-        case _ =>
-      }
-    }
-    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    ListenerBusDrain(sc)
-    sc.addSparkListener(listener)
-    try {
-      val c0 = compiles
-      val out = body
-      ListenerBusDrain(sc)
-      (out, plans.asScala.values.toSeq, compiles - c0)
-    } finally sc.removeSparkListener(listener)
+    val ((out, plans), compiles) = graft.CompileCount(graft.PlanTrace(spark)(body))
+    (out, plans, compiles)
   }
 
-  private def codegen(plans: Iterable[Seq[String]]) =
-    plans.exists(_.exists(_.startsWith("WholeStageCodegen")))
+  private def codegen(plans: Iterable[Seq[String]]) = graft.PlanTrace.codegen(plans)
 
   test("a batch within the broadcast threshold assigns without codegen; " +
       "at -1 it takes the lazy codegen path; rows are identical") {

@@ -24,6 +24,33 @@ class PipelineSpec extends AnyFunSuite {
   private def writeLanding(dir: Path, name: String, lines: Seq[String]): Unit =
     Files.write(dir.resolve(name), lines.mkString("\n").getBytes)
 
+  private val tables = Seq("storms" -> Schemas.storms,
+    "observations" -> Schemas.observations, "forecasts" -> Schemas.forecasts,
+    "tracks" -> Schemas.tracks, "steps" -> Schemas.steps)
+
+  /** Every row of the five tables, as sorted strings per table. */
+  private def dump(store: Store): Seq[Seq[String]] =
+    tables.map { case (t, schema) =>
+      store.read(t, schema).collect().map(_.toString).sorted.toSeq }
+
+  /** A b-deck and an a-deck landing dir for storm AL09 of 2022 at
+    * `dt`, six hours after `prev`, with CARQ, OFCL and a blocked tech. */
+  private def landings(prev: String, dt: String): (Path, Path) = {
+    val b = tmpDir("landing_b")
+    val a = tmpDir("landing_a")
+    writeLanding(b, "bal092022.dat", Seq(
+      Fixtures.bdeck(prev, 34), Fixtures.bdeck(prev, 50),
+      Fixtures.bdeck(dt, 34, vmax = 110, mslp = 940)))
+    writeLanding(b, "bal912022.dat", Seq(
+      Fixtures.bdeck(prev, 34, snum = 91, name = "INVEST",
+        lat = "150N", lon = "400W")))
+    writeLanding(a, "aal092022.dat", Seq(
+      Fixtures.adeck(prev, "CARQ", -6, 34), Fixtures.adeck(prev, "CARQ", 0, 34),
+      Fixtures.adeck(dt, "OFCL", 0, 34), Fixtures.adeck(dt, "OFCL", 12, 34),
+      Fixtures.adeck(dt, "OFCL", 12, 50), Fixtures.adeck(dt, "XTRP", 12, 34)))
+    (b, a)
+  }
+
   test("E1 bdeck ingest: storms resolved, observations pivoted + upserted") {
     val landing = tmpDir("landing_b")
     val storeDir = tmpDir("store1")
@@ -131,10 +158,6 @@ class PipelineSpec extends AnyFunSuite {
       Fixtures.adeck("2022092812", "OFCL", 0, 34),
       Fixtures.adeck("2022092812", "OFCL", 12, 34),
       Fixtures.adeck("2022092812", "OFCL", 12, 50)))
-    val tables = Seq("storms" -> Schemas.storms,
-      "observations" -> Schemas.observations, "forecasts" -> Schemas.forecasts,
-      "tracks" -> Schemas.tracks, "steps" -> Schemas.steps)
-
     // the first cycle creates the tables; the second runs against them
     def cycles(): (Seq[Seq[String]], Int) = {
       val store = new Store(spark, tmpDir("cycle_store").toString)
@@ -146,8 +169,7 @@ class PipelineSpec extends AnyFunSuite {
       }
       cycle()
       val (_, jobs) = graft.JobCount(spark)(cycle())
-      (tables.map { case (t, schema) =>
-        store.read(t, schema).collect().map(_.toString).sorted.toSeq }, jobs)
+      (dump(store), jobs)
     }
     val (held, heldJobs) = cycles()
     // at -1 nothing fits: the steps stay lazy and no join broadcasts
@@ -160,6 +182,74 @@ class PipelineSpec extends AnyFunSuite {
       s"cycle ran $heldJobs jobs at the default threshold, $unfitJobs at -1")
     // CARQ's -12 and -6 share the null hour: one step, not two
     assert(held(4).size == 4, held(4).mkString("\n"))
+  }
+
+  test("a missing table reads as an empty local relation estimated at 0 " +
+      "bytes, and a backfill into an empty store writes the tables it " +
+      "writes at threshold -1") {
+    val empty = new Store(spark, tmpDir("store_empty").toString)
+    tables.foreach { case (t, schema) =>
+      Seq(empty.read(t, schema), empty.readAsOf(t, schema, "1")).foreach { df =>
+        assert(df.queryExecution.optimizedPlan.stats.sizeInBytes == 0, t)
+        assert(df.isEmpty && df.schema == schema, t)
+      }
+    }
+    val (landingB, landingA) = landings("2022092700", "2022092706")
+    def backfill(): Seq[Seq[String]] = {
+      val store = new Store(spark, tmpDir("store_backfill").toString)
+      Pipelines.runBdeck(spark, landingB.toString, store, now)
+      Pipelines.runAdeck(spark, landingA.toString, store, now,
+        allowedModels = Seq("CARQ", "OFCL"), recencyHours = None)
+      dump(store)
+    }
+    val held = backfill()
+    assert(held.forall(_.nonEmpty), held)
+    assert(held == TestSpark.withConf(
+      "spark.sql.autoBroadcastJoinThreshold", "-1")(backfill()))
+  }
+
+  test("a backfill, a cron cycle and archiveStale that fit the threshold " +
+      "compile no class and plan no whole-stage codegen; at -1 they " +
+      "compile and write the same tables") {
+    // a cycle time no other spec uses, so Spark's code cache holds none
+    // of the -1 side's classes (timestamp literals are inlined in code)
+    val (backfillB, backfillA) = landings("2022100106", "2022100112")
+    val (cycleB, cycleA) = landings("2022100112", "2022100118")
+    val cycleNow = Timestamp.valueOf("2022-10-01 18:00:00")
+    val later = Timestamp.valueOf("2022-10-03 00:00:00")
+    def run(): (Seq[Seq[String]], Seq[Seq[String]], Long) = {
+      val store = new Store(spark, tmpDir("store_posture").toString)
+      val ((_, plans), compiles) = graft.CompileCount(graft.PlanTrace(spark) {
+        Pipelines.runBdeck(spark, backfillB.toString, store, cycleNow)
+        Pipelines.runAdeck(spark, backfillA.toString, store, cycleNow,
+          allowedModels = Seq("CARQ", "OFCL"), recencyHours = None)
+        Pipelines.runBdeck(spark, cycleB.toString, store, cycleNow)
+        Pipelines.runAdeck(spark, cycleA.toString, store, cycleNow,
+          allowedModels = Seq("CARQ", "OFCL"))
+        Maintenance.archiveStale(store, later)
+      })
+      (dump(store), plans.map(_._2), compiles)
+    }
+    // Spark generates three classes here whatever the posture, each cached
+    // for the JVM: the text reader's row projection, and a partial
+    // aggregate's key-and-buffer row joiner for stormSummaries'
+    // (string, string | bigint) and archiveStale's (string | timestamp)
+    // shapes. A first run caches them
+    val (_, _, firstCompiles) = run()
+    assert(firstCompiles <= 3)
+    val (held, heldPlans, heldCompiles) = run()
+    assert(heldCompiles == 0)
+    assert(heldPlans.nonEmpty && !graft.PlanTrace.codegen(heldPlans),
+      heldPlans.flatten.distinct)
+    val (unfit, unfitPlans, unfitCompiles) = TestSpark.withConf(
+      "spark.sql.autoBroadcastJoinThreshold", "-1")(run())
+    assert(unfitCompiles > 0)
+    assert(graft.PlanTrace.codegen(unfitPlans))
+    info(s"Janino compiles: $heldCompiles within the threshold, $unfitCompiles at -1")
+    tables.map(_._1).zip(held.zip(unfit)).foreach { case (t, (h, u)) =>
+      assert(h == u, s"table $t differs between the two thresholds")
+    }
+    assert(held.head.exists(_.contains("Archive")), held.head)
   }
 
   test("store layout gives partition pruning on (region, season) predicates") {
