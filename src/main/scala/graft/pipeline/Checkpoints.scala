@@ -40,14 +40,17 @@ import org.apache.spark.sql.internal.SQLConf
   * body whose inputs fit the same threshold runs without Janino, since
   * compiling its plans costs more CPU than the compiled code saves on
   * inputs that small. The cron cycles (`Pipelines.runBdeck`,
-  * `Pipelines.runAdeckLines`, `Maintenance.archiveStale`) run their bodies
-  * under it. [[localInterpretedIfFits]] is the read-side form: a query
-  * over inputs that fit is run under the posture and returned driver-held,
-  * so the caller's own actions on it run no job and no whole-stage code.
-  * The store's analyst reads (`ReferenceQueries`, `StormDataset.assemble`,
-  * `SqlSurface.sql`) and `CorpusIndex.assign` return through it. Running
-  * only the writes interpreted would move the Janino warm-up into the
-  * reads that follow them.
+  * `Pipelines.runAdeckLines`, the streaming `Pipelines.runAdeckBatch`,
+  * `Maintenance.archiveStale`) run their bodies under it; their plans
+  * inline the cycle's timestamp, so each cycle would compile anew.
+  * [[localInterpretedIfFits]] is the read-side form: a query's first run
+  * over inputs that fit is run under the posture and returned
+  * driver-held, so the caller's own actions on it run no job and no
+  * whole-stage code; a query that repeats on the session runs lazily and
+  * compiles once. The store's analyst reads (`ReferenceQueries`,
+  * `StormDataset.assemble`, `SqlSurface.sql`) and `CorpusIndex.assign`
+  * return through it. Running only the writes interpreted would move the
+  * Janino warm-up into the reads that follow them.
   */
 object Checkpoints {
   private def reliable: Boolean =
@@ -89,57 +92,108 @@ object Checkpoints {
     if (fits(Seq(df))) toLocal(df) else df
 
   /** `Some(body)`, run with `spark.sql.codegen.factoryMode=NO_CODEGEN`
-    * set on the session of `inputs`, when their summed estimate [[fits]];
-    * else `None`, and `body` does not run, so the caller keeps Spark's
-    * lazy whole-stage codegen path. Under the posture Spark plans no
-    * whole-stage codegen and evaluates every expression interpreted;
-    * jobs started inside `body` carry the setting to their tasks. The
-    * caller's value is restored when the last scope open on the session
-    * exits, also when `body` throws, so concurrent scopes on one session
-    * nest. `body` must finish its work inside the scope (return collected
-    * or driver-held results), and the setting is session-wide while it
-    * lasts, so run nothing concurrently on the same session that should
-    * keep codegen. */
+    * set on the session of each of `inputs`, when their summed estimate
+    * [[fits]]; else `None`, and `body` does not run, so the caller keeps
+    * Spark's lazy whole-stage codegen path. Under the posture Spark plans
+    * no whole-stage codegen and evaluates every expression interpreted;
+    * jobs started inside `body` carry the setting to their tasks. Every
+    * input's session takes the posture because a frame derived from
+    * frames of two sessions (a streaming micro-batch joined to the store)
+    * runs on the session of its left side. The caller's value is restored
+    * when the last scope open on a session exits, also when `body` throws,
+    * so concurrent scopes on one session nest. `body` must finish its work
+    * inside the scope (return collected or driver-held results), and the
+    * setting is session-wide while it lasts, so run nothing concurrently
+    * on the same sessions that should keep codegen. */
   def interpretedIfFits[A](inputs: DataFrame*)(body: => A): Option[A] =
-    if (!fits(inputs)) None
+    if (keepCodegen.value || !fits(inputs)) None
     else {
-      val conf = inputs.head.sparkSession.sessionState.conf
-      val key = SQLConf.CODEGEN_FACTORY_MODE.key
-      openScopes.synchronized {
-        val (open, before) = Option(openScopes.get(conf)).getOrElse(
-          (0, if (conf.contains(key)) Some(conf.getConfString(key)) else None))
-        openScopes.put(conf, (open + 1, before))
-        conf.setConfString(key, "NO_CODEGEN")
-      }
+      val confs = inputs.map(_.sparkSession.sessionState.conf).distinct
+      confs.foreach(open)
       try Some(body)
-      finally openScopes.synchronized {
-        val (open, before) = openScopes.get(conf)
-        if (open > 1) openScopes.put(conf, (open - 1, before))
-        else {
-          openScopes.remove(conf)
-          before.fold(conf.unsetConf(key))(conf.setConfString(key, _))
-        }
-      }
+      finally confs.foreach(close)
     }
 
+  /** `body` with every [[interpretedIfFits]] gate it passes answering
+    * `None`, whatever the sizes: Spark's lazy codegen path at the same
+    * threshold, so broadcast planning and driver-held frames do not change
+    * with the posture. For probes that time both postures. */
+  def keepingCodegen[A](body: => A): A = keepCodegen.withValue(true)(body)
+
+  private val keepCodegen = new scala.util.DynamicVariable(false)
+
+  private val factoryMode = SQLConf.CODEGEN_FACTORY_MODE.key
+
+  private def open(conf: SQLConf): Unit = openScopes.synchronized {
+    val (open, before) = Option(openScopes.get(conf)).getOrElse((0,
+      if (conf.contains(factoryMode)) Some(conf.getConfString(factoryMode))
+      else None))
+    openScopes.put(conf, (open + 1, before))
+    conf.setConfString(factoryMode, "NO_CODEGEN")
+  }
+
+  private def close(conf: SQLConf): Unit = openScopes.synchronized {
+    val (open, before) = openScopes.get(conf)
+    if (open > 1) openScopes.put(conf, (open - 1, before))
+    else {
+      openScopes.remove(conf)
+      before.fold(conf.unsetConf(factoryMode))(
+        conf.setConfString(factoryMode, _))
+    }
+  }
+
   /** `result`, run under [[interpretedIfFits]] of `inputs` and held on the
-    * driver as a `LocalRelation`, when `inputs` fit and `result` has at
-    * most one row per `defaultSize` bytes of the threshold; otherwise
-    * `result` lazy, with codegen. Pass the frames `result` is built from
-    * (the leaves it reads), not fresh reads of them: the check costs no
-    * extra file listing. The row cap bounds what the driver holds, since a
-    * join's output is not bounded by the size of its inputs; the rows of a
-    * result over the cap are not kept, and the frame comes back lazy. */
+    * driver as a `LocalRelation`, when `inputs` fit, the query has not run
+    * on this session before, and `result` has at most one row per
+    * `defaultSize` bytes of the threshold; otherwise `result` lazy, with
+    * codegen.
+    *
+    * A query's first run in a session is interpreted, since compiling it
+    * costs more than it saves on inputs this small. A query that repeats
+    * (the same analyzed plan, literals and table paths included, whatever
+    * the tables now hold) runs lazily, so its second run compiles the
+    * classes and later runs reuse them from Spark's code cache, as the
+    * parent's lazy path does.
+    *
+    * Pass the frames `result` is built from (the leaves it reads), not
+    * fresh reads of them: the check costs no extra file listing. The row
+    * cap bounds the rows the driver keeps, since a join's output is not
+    * bounded by the size of its inputs. A result over the cap is dropped
+    * once the cap is passed, and the frame comes back lazy, to be computed
+    * again with codegen by the caller's action. */
   def localInterpretedIfFits(inputs: DataFrame*)(
       result: => DataFrame): DataFrame =
     interpretedIfFits(inputs: _*) {
       val df = result
-      val cap = math.min(Int.MaxValue - 1L,
-        driverBytes(df.sparkSession) / math.max(1, df.schema.defaultSize))
-      Shims.collectUpTo(df, cap.toInt).getOrElse(
-        // a fresh plan: `df`'s physical plan was made without codegen
-        Shims.ofRows(df.sparkSession, df.queryExecution.analyzed))
+      if (!firstRun(df)) df
+      else {
+        val cap = math.min(Int.MaxValue - 1L,
+          driverBytes(df.sparkSession) / math.max(1, df.schema.defaultSize))
+        Shims.collectUpTo(df, cap.toInt).getOrElse(
+          // a fresh plan: `df`'s physical plan was made without codegen
+          Shims.ofRows(df.sparkSession, df.queryExecution.analyzed))
+      }
     }.getOrElse(result)
+
+  /** Whether `df`'s query is new to its session, recording it if so. Keys
+    * are semantic hashes of analyzed plans, the last [[SeenPerSession]]
+    * per session. */
+  private def firstRun(df: DataFrame): Boolean = {
+    val key = df.queryExecution.analyzed.semanticHash()
+    seen.synchronized {
+      seen.computeIfAbsent(df.sparkSession, _ =>
+        java.util.Collections.newSetFromMap(
+          new java.util.LinkedHashMap[Integer, java.lang.Boolean] {
+            override def removeEldestEntry(e: java.util.Map.Entry[Integer,
+                java.lang.Boolean]): Boolean = size > SeenPerSession
+          })).add(key)
+    }
+  }
+
+  private val SeenPerSession = 4096
+
+  private val seen = new java.util.WeakHashMap[SparkSession,
+    java.util.Set[Integer]]()
 
   /** Per session conf: the [[interpretedIfFits]] scopes open on it, and
     * the caller's `factoryMode` the last of them restores. */

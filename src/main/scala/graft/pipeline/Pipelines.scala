@@ -84,20 +84,37 @@ object Pipelines {
     runAdeckLines(AtcfParser.readDeckLines(spark, landing), store, now,
       allowedModels, recencyHours)
 
-  /** E2 core over pre-read (file, value) lines — shared by the batch
-    * entry point above and the streaming micro-batch variant
-    * (StreamingIngest.adeckStream). */
+  /** E2 core over pre-read (file, value) lines, shared by the batch
+    * entry point above and [[runAdeckBatch]]. */
   def runAdeckLines(lines: DataFrame, store: Store,
       now: Timestamp, allowedModels: Seq[String],
-      recencyHours: Option[Int] = Some(48)): Unit = {
+      recencyHours: Option[Int] = Some(48)): Unit =
+    gatedAdeck(lines, store)(adeckCycle(lines, _, _, _, _, store, now,
+      allowedModels, recencyHours))
+
+  /** E2 over one streaming micro-batch (StreamingIngest.adeckStream):
+    * `batch` is materialized distributed and lineage-truncated
+    * ([[Checkpoints.stable]]) and, unless empty, ingested at `now()`. The
+    * materialization takes the cycle's posture too. */
+  def runAdeckBatch(batch: DataFrame, store: Store, now: () => Timestamp,
+      allowedModels: Seq[String], recencyHours: Option[Int]): Unit =
+    gatedAdeck(batch, store) { (storms, forecasts, tracks, steps) =>
+      val lines = batch.transform(Checkpoints.stable)
+      if (!lines.isEmpty) adeckCycle(lines, storms, forecasts, tracks, steps,
+        store, now(), allowedModels, recencyHours)
+    }
+
+  /** `cycle` over the four store tables an a-deck cycle reads, each read
+    * once, under [[Checkpoints.interpretedIfFits]] of `lines` and them. */
+  private def gatedAdeck(lines: DataFrame, store: Store)(
+      cycle: (DataFrame, DataFrame, DataFrame, DataFrame) => Unit): Unit = {
     val storms = store.read("storms", Schemas.storms)
     val forecasts = store.read("forecasts", Schemas.forecasts)
     val tracks = store.read("tracks", Schemas.tracks)
     val steps = store.read("steps", Schemas.steps)
-    def cycle(): Unit = adeckCycle(lines, storms, forecasts, tracks, steps,
-      store, now, allowedModels, recencyHours)
+    def run(): Unit = cycle(storms, forecasts, tracks, steps)
     Checkpoints.interpretedIfFits(lines, storms, forecasts, tracks, steps)(
-      cycle()).getOrElse(cycle())
+      run()).getOrElse(run())
   }
 
   private def adeckCycle(lines: DataFrame, storms: DataFrame,

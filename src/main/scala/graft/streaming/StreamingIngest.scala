@@ -59,11 +59,8 @@ object StreamingIngest {
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val lines = batch.transform(graft.pipeline.Checkpoints.stable) // distributed, lineage-truncated
-        if (!lines.isEmpty)
-          Pipelines.runAdeckLines(lines, store, now(), allowedModels,
-            recencyHours)
-        ()
+        Pipelines.runAdeckBatch(batch, store, now, allowedModels,
+          recencyHours)
       }
       .start()
 

@@ -1,6 +1,7 @@
 package org.apache.spark.sql.graftshim
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
@@ -33,15 +34,25 @@ object Shims {
 
   /** `df`'s rows held on the driver as a `LocalRelation`, or `None` when
     * it has more than `cap` rows. One action over `df`'s own physical
-    * plan, so it runs the jobs a `collect` would; each partition stops
-    * after `cap + 1` rows, so an unbounded result is not materialized. */
+    * plan, so it runs the jobs a `collect` would. Each task returns at
+    * most `cap + 1` rows, and the driver keeps at most `cap + 1` in all:
+    * partitions that arrive after the cap is passed are dropped. */
   def collectUpTo(df: DataFrame, cap: Int): Option[DataFrame] = {
     val qe = df.queryExecution
     val rows = SQLExecution.withNewExecutionId(qe, Some("collect")) {
       qe.executedPlan match {
-        case local: LocalTableScanExec => local.executeCollect()
-        case plan => plan.execute()
-          .mapPartitions(_.take(cap + 1).map(_.copy())).collect()
+        case local: LocalTableScanExec => local.executeCollect().take(cap + 1)
+        case plan =>
+          val rdd = plan.execute()
+            .mapPartitions(_.take(cap + 1).map(_.copy()))
+          val kept = new Array[Array[InternalRow]](rdd.getNumPartitions)
+          var held = 0
+          rdd.sparkContext.runJob(rdd, (it: Iterator[InternalRow]) => it.toArray,
+            (i: Int, part: Array[InternalRow]) => {
+              kept(i) = part.take(cap + 1 - held)
+              held += kept(i).length
+            })
+          kept.flatten
       }
     }
     if (rows.length > cap) None

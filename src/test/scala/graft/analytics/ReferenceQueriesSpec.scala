@@ -20,7 +20,11 @@ class ReferenceQueriesSpec extends AnyFunSuite {
 
   private val now = Timestamp.valueOf("2022-09-28 18:00:00")
 
-  private lazy val store: Store = {
+  private lazy val store: Store = newStore()
+
+  /** A store built by the E1/E2 pipelines over one b-deck and one a-deck
+    * file of AL09 2022, in a fresh directory. */
+  private def newStore(): Store = {
     val landingB = Files.createTempDirectory("rq_b")
     val landingA = Files.createTempDirectory("rq_a")
     val storeDir = Files.createTempDirectory("rq_store")
@@ -98,10 +102,10 @@ class ReferenceQueriesSpec extends AnyFunSuite {
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq.sorted
 
-  test("every read returns the same rows held on the driver at the " +
-      "default threshold and lazy at -1") {
+  test("every read returns the same rows held on the driver on its first " +
+      "run at the default threshold, lazy on a repeat, and lazy at -1") {
     // (whether the frame is held, its rows), collected at the threshold
-    def reads(): Seq[(String, (Boolean, Seq[String]))] = {
+    def reads(store: Store): Seq[(String, (Boolean, Seq[String]))] = {
       val ds = StormDataset.assemble(spark, store, "AL092022")
       Seq(
         "basinModelCounts" -> ReferenceQueries.basinModelCounts(spark, store, "AL"),
@@ -122,12 +126,17 @@ class ReferenceQueriesSpec extends AnyFunSuite {
             |GROUP BY s.status ORDER BY s.status""".stripMargin))
         .map { case (name, df) => name -> (held(df), rows(df)) }
     }
-    val atDefault = reads()
+    // a store no other test has read, so every query is new to the session
+    val fresh = newStore()
+    val first = reads(fresh)
+    val repeat = reads(fresh)
     val atMinus1 = TestSpark.withConf(
-      "spark.sql.autoBroadcastJoinThreshold", "-1")(reads())
-    atDefault.zip(atMinus1).foreach { case ((name, (h, r)), (_, (l, lr))) =>
-      assert(h && !l, s"$name: held $h at the default, $l at -1")
-      assert(r.nonEmpty && r == lr, s"$name: $r vs $lr")
+      "spark.sql.autoBroadcastJoinThreshold", "-1")(reads(newStore()))
+    first.zip(repeat).zip(atMinus1).foreach {
+      case (((name, (h, r)), (_, (rh, rr))), (_, (l, lr))) =>
+        assert(h && !rh && !l,
+          s"$name: held $h on the first run, $rh on a repeat, $l at -1")
+        assert(r.nonEmpty && r == rr && r == lr, s"$name: $r vs $rr vs $lr")
     }
   }
 
@@ -135,8 +144,9 @@ class ReferenceQueriesSpec extends AnyFunSuite {
       "same rows") {
     // 256 KiB holds the store's tables, and at most 9,362 rows of
     // (string, bigint), whose defaultSize is 28 bytes
+    // over eight partitions, each of them under the cap
     def cross(n: Int) = SqlSurface.sql(spark, store,
-      s"SELECT s.nhc_id, r.id FROM storms s CROSS JOIN range($n) r")
+      s"SELECT s.nhc_id, r.id FROM storms s CROSS JOIN range(0, $n, 1, 8) r")
     val (over, under) = TestSpark.withConf(
       "spark.sql.autoBroadcastJoinThreshold", (256 * 1024).toString) {
       val o = cross(20000)

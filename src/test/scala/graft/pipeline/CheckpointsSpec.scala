@@ -72,6 +72,30 @@ class CheckpointsSpec extends AnyFunSuite {
     }
   }
 
+  test("interpretedIfFits takes the posture on the session of every input, " +
+      "and keepingCodegen keeps the codegen side") {
+    val other = spark.newSession()
+    def modes = Seq(spark, other).map(
+      _.sessionState.conf.getAllConfs.get("spark.sql.codegen.factoryMode"))
+    val before = modes
+    val small = Seq(spark.range(10).toDF("x"), other.range(10).toDF("x"))
+    assert(Checkpoints.interpretedIfFits(small: _*)(modes)
+      .contains(Seq(Some("NO_CODEGEN"), Some("NO_CODEGEN"))))
+    assert(modes == before)
+    var ran = false
+    assert(Checkpoints.keepingCodegen(
+      Checkpoints.interpretedIfFits(small: _*) { ran = true }).isEmpty)
+    assert(!ran)
+  }
+
+  test("collectUpTo holds a multi-partition result of exactly cap rows and " +
+      "returns None for one row more") {
+    val df = spark.range(0, 100, 1, 8).toDF("x")
+    val held = org.apache.spark.sql.graftshim.Shims.collectUpTo(df, 100)
+    assert(held.exists(_.collect().map(_.getLong(0)).toSeq == (0L until 100L)))
+    assert(org.apache.spark.sql.graftshim.Shims.collectUpTo(df, 99).isEmpty)
+  }
+
   test("concurrent interpretedIfFits scopes on one session nest: the " +
       "first to exit leaves the posture to the other, the last restores") {
     import java.util.concurrent.CountDownLatch

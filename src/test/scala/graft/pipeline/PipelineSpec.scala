@@ -252,6 +252,57 @@ class PipelineSpec extends AnyFunSuite {
     assert(held.head.exists(_.contains("Archive")), held.head)
   }
 
+  test("a streaming a-deck micro-batch that fits the threshold compiles no " +
+      "class beyond the stream's own scan and plans no whole-stage codegen " +
+      "in its ingest; at -1 it compiles and writes the same tables") {
+    val cycleNow = Timestamp.valueOf("2022-10-05 18:00:00")
+    // (the five tables, the plans the ingest ran, Janino compiles)
+    def run(): (Seq[Seq[String]], Seq[(String, Seq[String])], Long) = {
+      val (landingB, landingA) = landings("2022100506", "2022100512")
+      val store = new Store(spark, tmpDir("store_stream").toString)
+      Pipelines.runBdeck(spark, landingB.toString, store, cycleNow)
+      val ((_, plans), compiles) = graft.CompileCount(graft.PlanTrace(spark) {
+        graft.streaming.StreamingIngest.adeckStream(spark, landingA.toString,
+          store, tmpDir("stream_ck").toString, () => cycleNow,
+          Seq("CARQ", "OFCL"), recencyHours = None).awaitTermination(60000)
+      })
+      (dump(store), plans, compiles)
+    }
+    // The stream engine plans and runs the micro-batch's text scan itself,
+    // before the batch reaches the ingest, so that one plan keeps codegen.
+    // Its classes compile again on every query start, so a stream whose
+    // batches are only materialized, under the posture, is the baseline
+    def bare(): Long = {
+      val (_, landingA) = landings("2022100506", "2022100512")
+      graft.CompileCount(spark.readStream.textFile(landingA.toString)
+        .toDF("value")
+        .withColumn("file", regexp_extract(input_file_name(), "([^/]+)$", 1))
+        .writeStream.option("checkpointLocation", tmpDir("bare_ck").toString)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+          Checkpoints.interpretedIfFits(batch)(
+            batch.transform(Checkpoints.stable).isEmpty); ()
+        }.start().awaitTermination(60000))._2
+    }
+    def ingestPlans(plans: Seq[(String, Seq[String])]) =
+      plans.filterNot(_._2.exists(_.startsWith("Scan text"))).map(_._2)
+    run()
+    bare()
+    val baseline = bare()
+    val (held, heldPlans, heldCompiles) = run()
+    info(s"Janino compiles: $heldCompiles in the ingest's stream, " +
+      s"$baseline in one that only materializes its batch")
+    assert(heldCompiles == baseline)
+    assert(ingestPlans(heldPlans).nonEmpty &&
+      !graft.PlanTrace.codegen(ingestPlans(heldPlans)),
+      heldPlans.map(p => p._2.mkString(" / ")).mkString("\n"))
+    val (unfit, unfitPlans, unfitCompiles) = TestSpark.withConf(
+      "spark.sql.autoBroadcastJoinThreshold", "-1")(run())
+    assert(unfitCompiles > 0)
+    assert(graft.PlanTrace.codegen(ingestPlans(unfitPlans)))
+    assert(held.forall(_.nonEmpty) && held == unfit)
+  }
+
   test("store layout gives partition pruning on (region, season) predicates") {
     val storeDir = tmpDir("store_prune")
     val store = new Store(spark, storeDir.toString)
