@@ -33,7 +33,7 @@ import org.apache.spark.sql.SparkSession
   * executes ONCE, in the untimed warm pass, and the timed repeats read
   * the materialized parquet output. Their per-query seconds therefore
   * measure sink read-back, NOT streaming throughput (drain costs live
-  * in tools/TimeParts "build" time and the Stream*Probe tools);
+  * in `graft.Profile parts` "build" time and the Stream*Probe tools);
   * round-over-round comparisons stay valid because every round times
   * the same thing.
   *

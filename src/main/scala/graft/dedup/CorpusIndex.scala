@@ -164,7 +164,7 @@ object CorpusIndex {
       textCol: String, idCol: String, batchTag: String,
       shingleSize: Int = 3, numHashes: Int = 32, bands: Int = 8): Unit = {
     checkMeta(store, prefix, shingleSize, numHashes, bands)
-    def publish(): Unit = {
+    Checkpoints.interpretedIfFits(accepted) {
       val (exact, rows) = indexRows(accepted, textCol, idCol, shingleSize)
       val r = rows.persist()
       FsUtils.publishBatch(exact, store.path(s"${prefix}_exact"), batchTag)
@@ -174,7 +174,6 @@ object CorpusIndex {
         store.path(s"${prefix}_bands"), batchTag)
       r.unpersist(false)
     }
-    Checkpoints.interpretedIfFits(accepted)(publish()).getOrElse(publish())
     // cross-table commit point, written LAST: a crash anywhere above
     // leaves the tag uncommitted and [[IndexCommits.validate]] fails the next
     // assign loudly instead of near-matching against a partial batch

@@ -636,7 +636,7 @@ object Dedup {
     // bounds driver-side analysis + AQE per-stage re-optimization (a
     // persist()-based variant kept full logical plans and measured 3-5x
     // slower on pure driver overhead). The round-7 shape paid those
-    // checkpoints as ~9 SEQUENTIAL driver barriers (TimeParts: exec
+    // checkpoints as ~9 SEQUENTIAL driver barriers (Profile parts: exec
     // 0.5-0.7 s, the rest barrier latency — a cost every micro-batch of
     // StreamingDedup.corpusIngest repeats), so this shape halves the
     // critical path by running independent chains as CONCURRENT driver

@@ -245,7 +245,7 @@ object SearchOps {
     // ONE aggregation pass computes the norm AND the query dot: norm
     // and hits as separate branches each re-derived the corpus-sized
     // explode -> tf -> df-join subtree (their post-join exchanges
-    // differ, so nothing above the join reuses — JobTrace showed two
+    // differ, so nothing above the join reuses — Profile jobs showed two
     // ~10 s twin jobs at 32x, the whole super-linear residue of the
     // scale probe). Conditional sums over the same rows cost nothing
     // extra; docs with no query term drop exactly as the old semi

@@ -91,36 +91,40 @@ object Checkpoints {
   def localIfFits(df: DataFrame): DataFrame =
     if (fits(Seq(df))) toLocal(df) else df
 
-  /** `Some(body)`, run with `spark.sql.codegen.factoryMode=NO_CODEGEN`
-    * set on the session of each of `inputs`, when their summed estimate
-    * [[fits]]; else `None`, and `body` does not run, so the caller keeps
-    * Spark's lazy whole-stage codegen path. Under the posture Spark plans
-    * no whole-stage codegen and evaluates every expression interpreted;
-    * jobs started inside `body` carry the setting to their tasks. Every
-    * input's session takes the posture because a frame derived from
-    * frames of two sessions (a streaming micro-batch joined to the store)
-    * runs on the session of its left side. The caller's value is restored
+  /** `body`, run with `spark.sql.codegen.factoryMode=NO_CODEGEN` set on
+    * the session of each of `inputs` when their summed estimate [[fits]],
+    * and run plainly otherwise, keeping Spark's lazy whole-stage codegen
+    * path. Under the posture Spark plans no whole-stage codegen and
+    * evaluates every expression interpreted; jobs started inside `body`
+    * carry the setting to their tasks. Every input's session takes the
+    * posture because a frame derived from frames of two sessions (a
+    * streaming micro-batch joined to the store) runs on the session of its
+    * left side. The caller's value is restored
     * when the last scope open on a session exits, also when `body` throws,
     * so concurrent scopes on one session nest. `body` must finish its work
     * inside the scope (return collected or driver-held results), and the
     * setting is session-wide while it lasts, so run nothing concurrently
     * on the same sessions that should keep codegen. */
-  def interpretedIfFits[A](inputs: DataFrame*)(body: => A): Option[A] =
-    if (keepCodegen.value || !fits(inputs)) None
-    else {
-      val confs = inputs.map(_.sparkSession.sessionState.conf).distinct
-      confs.foreach(open)
-      try Some(body)
-      finally confs.foreach(close)
-    }
+  def interpretedIfFits[A](inputs: DataFrame*)(body: => A): A =
+    if (codegenKept(inputs)) body else noCodegen(inputs)(body)
 
-  /** `body` with every [[interpretedIfFits]] gate it passes answering
-    * `None`, whatever the sizes: Spark's lazy codegen path at the same
-    * threshold, so broadcast planning and driver-held frames do not change
-    * with the posture. For probes that time both postures. */
+  /** `body` with every [[interpretedIfFits]] gate it passes running its
+    * body plainly, whatever the sizes: Spark's lazy codegen path at the
+    * same threshold, so broadcast planning and driver-held frames do not
+    * change with the posture. For probes that time both postures. */
   def keepingCodegen[A](body: => A): A = keepCodegen.withValue(true)(body)
 
   private val keepCodegen = new scala.util.DynamicVariable(false)
+
+  private def codegenKept(inputs: Seq[DataFrame]): Boolean =
+    keepCodegen.value || !fits(inputs)
+
+  private def noCodegen[A](inputs: Seq[DataFrame])(body: => A): A = {
+    val confs = inputs.map(_.sparkSession.sessionState.conf).distinct
+    confs.foreach(open)
+    try body
+    finally confs.foreach(close)
+  }
 
   private val factoryMode = SQLConf.CODEGEN_FACTORY_MODE.key
 
@@ -163,7 +167,8 @@ object Checkpoints {
     * again with codegen by the caller's action. */
   def localInterpretedIfFits(inputs: DataFrame*)(
       result: => DataFrame): DataFrame =
-    interpretedIfFits(inputs: _*) {
+    if (codegenKept(inputs)) result
+    else noCodegen(inputs) {
       val df = result
       if (!firstRun(df)) df
       else {
@@ -173,7 +178,7 @@ object Checkpoints {
           // a fresh plan: `df`'s physical plan was made without codegen
           Shims.ofRows(df.sparkSession, df.queryExecution.analyzed))
       }
-    }.getOrElse(result)
+    }
 
   /** Whether `df`'s query is new to its session, recording it if so. Keys
     * are semantic hashes of analyzed plans, the last [[SeenPerSession]]

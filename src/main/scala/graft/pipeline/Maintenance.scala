@@ -20,7 +20,7 @@ object Maintenance {
   def archiveStale(store: Store, now: Timestamp, hours: Int = 24): Unit = {
     val storms = store.read("storms", Schemas.storms)
     val observations = store.read("observations", Schemas.observations)
-    def archive(): Unit = {
+    Checkpoints.interpretedIfFits(storms, observations) {
       val lastObs = observations
         .groupBy("nhc_id").agg(max("datetime_utc").as("last_obs"))
       val updated = storms.join(lastObs, Seq("nhc_id"), "left_outer")
@@ -33,8 +33,6 @@ object Maintenance {
       // no seam: the staged write reads the table before replacing it
       store.write("storms", updated)
     }
-    Checkpoints.interpretedIfFits(storms, observations)(archive())
-      .getOrElse(archive())
   }
 
   /** routines.py:33-63 — delete invests (nhc_number >= 90) whose last

@@ -41,9 +41,8 @@ object Pipelines {
     val lines = AtcfParser.readDeckLines(spark, landing)
     val existing = store.read("storms", Schemas.storms)
     val observations = store.read("observations", Schemas.observations)
-    def cycle(): Unit = bdeckCycle(lines, existing, observations, store, now)
-    Checkpoints.interpretedIfFits(lines, existing, observations)(cycle())
-      .getOrElse(cycle())
+    Checkpoints.interpretedIfFits(lines, existing, observations)(
+      bdeckCycle(lines, existing, observations, store, now))
   }
 
   private def bdeckCycle(lines: DataFrame, existing: DataFrame,
@@ -112,9 +111,8 @@ object Pipelines {
     val forecasts = store.read("forecasts", Schemas.forecasts)
     val tracks = store.read("tracks", Schemas.tracks)
     val steps = store.read("steps", Schemas.steps)
-    def run(): Unit = cycle(storms, forecasts, tracks, steps)
     Checkpoints.interpretedIfFits(lines, storms, forecasts, tracks, steps)(
-      run()).getOrElse(run())
+      cycle(storms, forecasts, tracks, steps))
   }
 
   private def adeckCycle(lines: DataFrame, storms: DataFrame,

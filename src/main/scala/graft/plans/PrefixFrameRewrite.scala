@@ -75,19 +75,17 @@ import org.apache.spark.sql.types._
   * up to 2W−1 wide). W = (max lookback + 1) × `graft.prefixFrame
   * .chunkFactor` (default 24 — the DataFrame form's lookback:chunk
   * ratio). If W would overflow a long, chunking is skipped (the
-  * unchunked rewrite is still work-optimal). Kill switches:
-  * `-Dgraft.prefixFrame.rewrite=false` disables the rule,
-  * `-Dgraft.prefixFrame.chunk=false` keeps the round-18 unchunked
-  * shape (the probe baseline).
+  * unchunked rewrite is still work-optimal). Spark's
+  * `spark.sql.optimizer.excludedRules=graft.plans.PrefixFrameRewriteRule`
+  * turns the rule off for a session (the reference side of its specs and
+  * plan dumps); `-Dgraft.prefixFrame.chunk=false` keeps the round-18
+  * unchunked shape (the probe baseline).
   *
   * Output ROW ORDER within a partition differs (an Aggregate replaces
   * the Window); SQL guarantees none without ORDER BY, and the
   * differential gates all sort.
   */
 object PrefixFrameRewriteRule extends Rule[LogicalPlan] {
-
-  private def enabled: Boolean =
-    !sys.props.get("graft.prefixFrame.rewrite").contains("false")
 
   private def chunkEnabled: Boolean =
     !sys.props.get("graft.prefixFrame.chunk").contains("false")
@@ -146,7 +144,6 @@ object PrefixFrameRewriteRule extends Rule[LogicalPlan] {
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (!enabled) return plan
     plan.transformUp {
       case w @ Window(we, ps, Seq(so @ SortOrder(ord, Ascending, _, _)),
           child, _)

@@ -6,11 +6,10 @@ import java.sql.Timestamp
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Session
+import graft.{Measure, Session}
 import graft.analytics.{ReferenceQueries, SqlSurface}
 import graft.datasets.StormDataset
 import graft.ops.ParseOps
@@ -140,15 +139,8 @@ object CycleScaleProbe {
     val store = new Store(spark, work.toString)
     val ids = new String(Files.readAllBytes(root.resolve("ids.txt")), UTF_8)
       .split("\n").toSeq
-    val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-      .asInstanceOf[com.sun.management.OperatingSystemMXBean]
-    def timed(body: => Unit): (Double, Double, Long) = {
-      val (w, c) = (System.nanoTime(), os.getProcessCpuTime)
-      val k = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-      if (posture == "codegen") Checkpoints.keepingCodegen(body) else body
-      ((System.nanoTime() - w) / 1e9, (os.getProcessCpuTime - c) / 1e9,
-        CodegenMetrics.METRIC_COMPILATION_TIME.getCount - k)
-    }
+    def timed(body: => Unit): Measure.Timed[Unit] = Measure.timed(
+      if (posture == "codegen") Checkpoints.keepingCodegen(body) else body)
     def cycle(now: Timestamp): Unit = {
       Pipelines.runBdeck(spark, root.resolve("cycle/b").toString, store, now)
       Pipelines.runAdeck(spark, root.resolve("cycle/a").toString, store, now,
@@ -175,8 +167,8 @@ object CycleScaleProbe {
     val samples = Seq(
       "cycle" -> timed(cycle(CycleNow)), "reads" -> timed(reads()),
       "cycle2" -> timed(cycle(Cycle2Now)), "reads2" -> timed(reads()))
-    def js(name: String, t: (Double, Double, Long)) =
-      f""""${name}_wall_s": ${t._1}%.3f, "${name}_cpu_s": ${t._2}%.3f, "${name}_compiles": ${t._3}"""
+    def js(name: String, t: Measure.Timed[Unit]) =
+      f""""${name}_wall_s": ${t.wallS}%.3f, "${name}_cpu_s": ${t.cpuS}%.3f, "${name}_compiles": ${t.compiles}"""
     println(s"""[cscale] {"pct": $pct, "posture": "$posture", ${
       samples.map { case (n, t) => js(n, t) }.mkString(", ")}}""")
     spark.stop()

@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.functions._
 
-import graft.{Session, Tables}
+import graft.{Measure, Session, Tables}
 import graft.functions.Text
 import graft.similarity.EditJoin
 import graft.pipeline.Store
@@ -11,7 +11,7 @@ import graft.pipeline.Store
   * ([[graft.streaming.StreamingDedup.fuzzyIngest]] ==
   * [[EditJoin.assignDecisions]] against the persisted prefix index):
   * corpus grows (1x / 8x / 32x replicated titles, reusing
-  * [[ScaleProbe]]'s re-keyed replicas), the batch stays FIXED, and the
+  * [[Replicate]]'s re-keyed replicas), the batch stays FIXED, and the
   * one-time index build is separated from the per-batch decision — the
   * production question is "what does one micro-batch cost against an
   * ever-larger indexed corpus". The corpus participates in a decision
@@ -47,20 +47,15 @@ object FuzzyScaleProbe {
     def probe(factor: Int): Unit = {
       val dir = if (factor == 1) src else s"/tmp/sfx$factor"
       require(new java.io.File(s"$dir/documents.parquet").exists(),
-        s"run `runMain graft.tools.ScaleProbe $factor q_text_tokens` first to build $dir")
+        s"run `runMain graft.tools.Replicate $factor $dir` first")
       val store = new Store(spark,
         s"/tmp/graft_ss/p${ProcessHandle.current().pid}/fzidx_probe$factor")
-      val t0 = System.nanoTime()
-      EditJoin.buildIndex(store, "fz", titles(dir), "doc_id", "title",
-        maxDist = 4)
-      val tBuild = (System.nanoTime() - t0) / 1e9
-      def once(): Double = {
-        val t = System.nanoTime()
+      val tBuild = Measure.timed(EditJoin.buildIndex(store, "fz", titles(dir),
+        "doc_id", "title", maxDist = 4)).wallS
+      def once(): Double = Measure.timed(
         EditJoin.assignDecisions(store, "fz", batch, "doc_id", "title",
             maxDist = 4)
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t) / 1e9
-      }
+          .write.format("noop").mode("overwrite").save()).wallS
       once() // warm
       val tAssign = math.min(once(), once())
       println(f"[fzscale] corpus x$factor%-3d build=${tBuild}%6.2fs  " +

@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Session
+import graft.{Measure, Session}
 
 /** Skew probe wave 4 (round 18): the graph modality and the
   * track-interpolation window — the two surfaces waves 1-3 never
@@ -92,9 +92,7 @@ object GraphProbe {
 
   private def time(body: => DataFrame): Double = {
     body.write.format("noop").mode("overwrite").save() // warm
-    val t0 = System.nanoTime()
-    body.write.format("noop").mode("overwrite").save()
-    (System.nanoTime() - t0) / 1e9
+    Measure.timed(body.write.format("noop").mode("overwrite").save()).wallS
   }
 
   def main(args: Array[String]): Unit = {

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
 
-import graft.{Session, Tables}
+import graft.{Measure, Session, Tables}
 import graft.dedup.{CorpusIndex, Dedup}
 import graft.pipeline.{Checkpoints, Store}
 
@@ -41,8 +41,6 @@ object IncrementalScaleProbe {
     val reps = sys.env.get("REPS").map(_.toInt).getOrElse(4)
     val src = "/root/testdata/sf0.1"
     val spark = Session.local()
-    val cpu = java.lang.management.ManagementFactory.getOperatingSystemMXBean
-      .asInstanceOf[com.sun.management.OperatingSystemMXBean]
 
     // Fixed batch: every fifth sf0.1 document, re-keyed clear of every
     // replica id range, split across the three decision paths — a pure
@@ -68,10 +66,8 @@ object IncrementalScaleProbe {
         s"run `runMain graft.tools.Replicate $factor $dir` first")
       val store = new Store(spark,
         s"/tmp/graft_ss/p${ProcessHandle.current().pid}/cidx_probe$factor")
-      val t0 = System.nanoTime()
-      CorpusIndex.build(store, "c",
-        Tables.load(spark, dir, "documents"), "text", "doc_id")
-      val tBuild = (System.nanoTime() - t0) / 1e9
+      val tBuild = Measure.timed(CorpusIndex.build(store, "c",
+        Tables.load(spark, dir, "documents"), "text", "doc_id")).wallS
       val Seq(exact, shingles, bandRows) = Seq("_exact", "_shingles", "_bands")
         .map(t => spark.read.parquet(store.path(s"c$t")))
       val estimate = (batch +: Seq(exact, shingles, bandRows))
@@ -92,10 +88,8 @@ object IncrementalScaleProbe {
         "interpreted" -> (() => interpreted()))
       val samples = arms.map(_._1 -> Seq.newBuilder[(Double, Double)]).toMap
       for (r <- 0 to reps; (name, run) <- if (r % 2 == 0) arms else arms.reverse) {
-        val (w0, c0) = (System.nanoTime(), cpu.getProcessCpuTime)
-        run()
-        if (r > 0) samples(name) += (((System.nanoTime() - w0) / 1e9,
-          (cpu.getProcessCpuTime - c0) / 1e9))
+        val t = Measure.timed(run())
+        if (r > 0) samples(name) += ((t.wallS, t.cpuS))
       }
       def median(xs: Seq[Double]) = xs.sorted.apply(xs.size / 2)
       val cols = arms.map { case (name, _) =>

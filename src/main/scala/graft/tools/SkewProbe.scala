@@ -3,9 +3,10 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.{Session, SparkEntry, Tables}
+import graft.{Profile, Session, Tables}
 
-/** Zipfian-skew probe: the scale question [[ScaleProbe]] can't answer.
+/** Zipfian-skew probe: the scale question a uniform replica
+  * ([[Replicate]], timed by `graft.Profile compare`) can't answer.
   * Uniform replication grows every key's group by the same factor; real
   * crawl corpora are zipfian — ONE source holds half the docs, ONE
   * length block holds the head entity's title variants, ONE vector cell
@@ -173,16 +174,7 @@ object SkewProbe {
     Replicate.build(spark, src, uniform, factor)
     buildSkewed(spark, src, skewed, factor)
 
-    probes.foreach { name =>
-      val fn = SparkEntry.queries(name)
-      def time(dir: String): Double = {
-        fn(spark, dir).write.format("noop").mode("overwrite").save() // warm
-        val t0 = System.nanoTime()
-        fn(spark, dir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      val u = time(uniform)
-      val s = time(skewed)
+    Profile.compare(spark, uniform, skewed, probes).foreach { case (name, u, s) =>
       println(f"[skew] $name%-24s uniform_x$factor=${u}%7.2fs  " +
         f"zipf_x$factor=${s}%7.2fs  skew_ratio=${s / u}%5.2f")
     }

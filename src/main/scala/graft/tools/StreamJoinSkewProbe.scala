@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.Session
+import graft.{Measure, Session}
 
 /** Skew probe wave 5b (round 18): the STREAM-STREAM interval join under
   * a mega key — the second keyed-streaming-state regime (wave 5 seeded
@@ -76,7 +76,6 @@ object StreamJoinSkewProbe {
         org.apache.spark.sql.types.TimestampType),
       org.apache.spark.sql.types.StructField("user_id",
         org.apache.spark.sql.types.LongType)))
-    val t0 = System.nanoTime()
     val cs = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "2").parquet(s"$landing/clicks")
       .select(col("id").as("click_id"), col("user_id"),
@@ -98,7 +97,7 @@ object StreamJoinSkewProbe {
     val cond = col("user_id") === col("b_user") &&
       col("p_ts") >= col("c_ts") &&
       col("p_ts") <= col("c_ts") + expr(s"interval $rangeMinutes minutes")
-    val q = cj.join(bj,
+    val secs = Measure.timed(cj.join(bj,
         if (chunked) cond && col("k") === col("bk") else cond)
       .select("click_id", "buy_id", "user_id")
       .writeStream.format("parquet")
@@ -106,8 +105,7 @@ object StreamJoinSkewProbe {
       .option("checkpointLocation", ckpt)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
-    q.awaitTermination()
-    val secs = (System.nanoTime() - t0) / 1e9
+      .awaitTermination()).wallS
     (secs, spark.read.parquet(out).count())
   }
 

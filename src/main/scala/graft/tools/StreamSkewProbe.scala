@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-import graft.Session
+import graft.{Measure, Session}
 
 /** Skew probe wave 5 (round 18, seed): STREAMING state under a mega
   * key — the one per-key regime waves 1-4 never measured. Batch windows
@@ -52,11 +52,9 @@ object StreamSkewProbe {
     val ckpt = s"/tmp/streamskew/ckpt_$tag"
     graft.pipeline.FsUtils.deleteRecursively(new java.io.File(out))
     graft.pipeline.FsUtils.deleteRecursively(new java.io.File(ckpt))
-    val t0 = System.nanoTime()
-    val q = graft.streaming.StreamingSessions.appendSessionStream(
+    Measure.timed(graft.streaming.StreamingSessions.appendSessionStream(
       spark, landing, out, ckpt, gapMinutes = 30, delay = "10 minutes")
-    q.awaitTermination()
-    (System.nanoTime() - t0) / 1e9
+      .awaitTermination()).wallS
   }
 
   def main(args: Array[String]): Unit = {

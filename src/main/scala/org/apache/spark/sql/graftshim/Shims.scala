@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graftshim
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -31,6 +32,12 @@ object Shims {
 
   /** The analyzed logical plan of a DataFrame (resolved attributes). */
   def analyzedPlan(df: DataFrame): LogicalPlan = df.queryExecution.analyzed
+
+  /** Wait until the listener bus has delivered every event posted so far
+    * (the job ends of each finished action included) to every listener.
+    * Spark keeps the bus's own drain package-private. */
+  def drainListenerBus(sc: SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty(60000L)
 
   /** `df`'s rows held on the driver as a `LocalRelation`, or `None` when
     * it has more than `cap` rows. One action over `df`'s own physical

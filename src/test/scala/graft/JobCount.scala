@@ -2,9 +2,9 @@ package graft
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftshim.Shims
 
 /** Spark jobs started by `body` on the calling thread, counted by a
   * listener that matches a job-local tag (other threads' jobs carry no
@@ -19,12 +19,12 @@ object JobCount {
         if (Option(e.properties).exists(_.getProperty("graft.test.jobcount") == tag))
           n.incrementAndGet()
     }
-    ListenerBusDrain(sc)
+    Shims.drainListenerBus(sc)
     sc.addSparkListener(listener)
     sc.setLocalProperty("graft.test.jobcount", tag)
     try {
       val out = body
-      ListenerBusDrain(sc)
+      Shims.drainListenerBus(sc)
       (out, n.get())
     } finally {
       sc.setLocalProperty("graft.test.jobcount", null)

@@ -2,11 +2,11 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlanInfo
 import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
+import org.apache.spark.sql.graftshim.Shims
 
 /** The physical plans of the SQL executions `body` starts. */
 object PlanTrace {
@@ -31,11 +31,11 @@ object PlanTrace {
         case _ =>
       }
     }
-    ListenerBusDrain(sc)
+    Shims.drainListenerBus(sc)
     sc.addSparkListener(listener)
     try {
       val out = body
-      ListenerBusDrain(sc)
+      Shims.drainListenerBus(sc)
       (out, plans.asScala.values.toSeq)
     } finally sc.removeSparkListener(listener)
   }

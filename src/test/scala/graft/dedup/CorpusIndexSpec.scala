@@ -188,8 +188,8 @@ class CorpusIndexSpec extends AnyFunSuite {
   /** `body`'s result, the plans of the SQL executions it starts and the
     * Janino compiles it causes. */
   private def traced[T](body: => T): (T, Seq[(String, Seq[String])], Long) = {
-    val ((out, plans), compiles) = graft.CompileCount(graft.PlanTrace(spark)(body))
-    (out, plans, compiles)
+    val t = graft.Measure.timed(graft.PlanTrace(spark)(body))
+    (t.value._1, t.value._2, t.compiles)
   }
 
   private def codegen(plans: Iterable[Seq[String]]) = graft.PlanTrace.codegen(plans)

@@ -17,8 +17,9 @@ class PlanShapeSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   private val dir = "/root/testdata/sf0.001"
 
-  /** Final-plan string: AQE keeps `isFinalPlan=false` (no codegen spans
-    * shown) until the query actually runs, so execute it first. */
+  /** Final-plan string, as `graft.Profile final` dumps it: AQE keeps
+    * `isFinalPlan=false` (no codegen spans shown) until the query
+    * actually runs, so execute it first. */
   private def plan(df: org.apache.spark.sql.DataFrame): String = {
     df.collect()
     df.queryExecution.executedPlan.toString()

@@ -50,13 +50,14 @@ class CheckpointsSpec extends AnyFunSuite {
   }
 
   test("interpretedIfFits sets NO_CODEGEN only inside its scope, restores " +
-      "the caller's value on a throw, and does not run at threshold -1") {
+      "the caller's value on a throw, and at threshold -1 runs the body " +
+      "without the posture") {
     val key = "spark.sql.codegen.factoryMode"
     val conf = spark.sessionState.conf
     def mode = conf.getAllConfs.get(key)
     val before = mode
     val small = spark.range(10).toDF("x")
-    assert(Checkpoints.interpretedIfFits(small)(mode).contains(Some("NO_CODEGEN")))
+    assert(Checkpoints.interpretedIfFits(small)(mode).contains("NO_CODEGEN"))
     assert(mode == before)
     TestSpark.withConf(key, "CODEGEN_ONLY") {
       intercept[IllegalStateException] {
@@ -66,9 +67,7 @@ class CheckpointsSpec extends AnyFunSuite {
     }
     assert(mode == before)
     TestSpark.withConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
-      var ran = false
-      assert(Checkpoints.interpretedIfFits(small) { ran = true }.isEmpty)
-      assert(!ran)
+      assert(Checkpoints.interpretedIfFits(small)(mode).isEmpty)
     }
   }
 
@@ -79,13 +78,11 @@ class CheckpointsSpec extends AnyFunSuite {
       _.sessionState.conf.getAllConfs.get("spark.sql.codegen.factoryMode"))
     val before = modes
     val small = Seq(spark.range(10).toDF("x"), other.range(10).toDF("x"))
-    assert(Checkpoints.interpretedIfFits(small: _*)(modes)
-      .contains(Seq(Some("NO_CODEGEN"), Some("NO_CODEGEN"))))
+    assert(Checkpoints.interpretedIfFits(small: _*)(modes) ==
+      Seq(Some("NO_CODEGEN"), Some("NO_CODEGEN")))
     assert(modes == before)
-    var ran = false
     assert(Checkpoints.keepingCodegen(
-      Checkpoints.interpretedIfFits(small: _*) { ran = true }).isEmpty)
-    assert(!ran)
+      Checkpoints.interpretedIfFits(small: _*)(modes)) == before)
   }
 
   test("collectUpTo holds a multi-partition result of exactly cap rows and " +
@@ -115,7 +112,7 @@ class CheckpointsSpec extends AnyFunSuite {
       Await.result(outer, 1.minute) // the outer scope exits first
       mode
     }
-    assert(inner.contains(Some("NO_CODEGEN")))
+    assert(inner.contains("NO_CODEGEN"))
     assert(mode == before)
   }
 

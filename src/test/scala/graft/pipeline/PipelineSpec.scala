@@ -219,7 +219,7 @@ class PipelineSpec extends AnyFunSuite {
     val later = Timestamp.valueOf("2022-10-03 00:00:00")
     def run(): (Seq[Seq[String]], Seq[Seq[String]], Long) = {
       val store = new Store(spark, tmpDir("store_posture").toString)
-      val ((_, plans), compiles) = graft.CompileCount(graft.PlanTrace(spark) {
+      val t = graft.Measure.timed(graft.PlanTrace(spark) {
         Pipelines.runBdeck(spark, backfillB.toString, store, cycleNow)
         Pipelines.runAdeck(spark, backfillA.toString, store, cycleNow,
           allowedModels = Seq("CARQ", "OFCL"), recencyHours = None)
@@ -228,7 +228,7 @@ class PipelineSpec extends AnyFunSuite {
           allowedModels = Seq("CARQ", "OFCL"))
         Maintenance.archiveStale(store, later)
       })
-      (dump(store), plans.map(_._2), compiles)
+      (dump(store), t.value._2.map(_._2), t.compiles)
     }
     // Spark generates three classes here whatever the posture, each cached
     // for the JVM: the text reader's row projection, and a partial
@@ -261,12 +261,12 @@ class PipelineSpec extends AnyFunSuite {
       val (landingB, landingA) = landings("2022100506", "2022100512")
       val store = new Store(spark, tmpDir("store_stream").toString)
       Pipelines.runBdeck(spark, landingB.toString, store, cycleNow)
-      val ((_, plans), compiles) = graft.CompileCount(graft.PlanTrace(spark) {
+      val t = graft.Measure.timed(graft.PlanTrace(spark) {
         graft.streaming.StreamingIngest.adeckStream(spark, landingA.toString,
           store, tmpDir("stream_ck").toString, () => cycleNow,
           Seq("CARQ", "OFCL"), recencyHours = None).awaitTermination(60000)
       })
-      (dump(store), plans, compiles)
+      (dump(store), t.value._2, t.compiles)
     }
     // The stream engine plans and runs the micro-batch's text scan itself,
     // before the batch reaches the ingest, so that one plan keeps codegen.
@@ -274,7 +274,7 @@ class PipelineSpec extends AnyFunSuite {
     // batches are only materialized, under the posture, is the baseline
     def bare(): Long = {
       val (_, landingA) = landings("2022100506", "2022100512")
-      graft.CompileCount(spark.readStream.textFile(landingA.toString)
+      graft.Measure.timed(spark.readStream.textFile(landingA.toString)
         .toDF("value")
         .withColumn("file", regexp_extract(input_file_name(), "([^/]+)$", 1))
         .writeStream.option("checkpointLocation", tmpDir("bare_ck").toString)
@@ -282,7 +282,7 @@ class PipelineSpec extends AnyFunSuite {
         .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
           Checkpoints.interpretedIfFits(batch)(
             batch.transform(Checkpoints.stable).isEmpty); ()
-        }.start().awaitTermination(60000))._2
+        }.start().awaitTermination(60000)).compiles
     }
     def ingestPlans(plans: Seq[(String, Seq[String])]) =
       plans.filterNot(_._2.exists(_.startsWith("Scan text"))).map(_._2)

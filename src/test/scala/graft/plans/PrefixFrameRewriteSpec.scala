@@ -19,11 +19,11 @@ class PrefixFrameRewriteSpec extends AnyFunSuite {
   private def plan(df: DataFrame): String =
     df.queryExecution.executedPlan.toString
 
-  /** Collect with the rewrite disabled — the reference semantics. */
-  private def without[T](body: => T): T = {
-    sys.props("graft.prefixFrame.rewrite") = "false"
-    try body finally sys.props.remove("graft.prefixFrame.rewrite")
-  }
+  /** `body` with the rule excluded from the session's optimizer — the
+    * reference semantics. Build the reference query inside it: a frame
+    * planned before keeps its plan. */
+  private def without[T](body: => T): T = TestSpark.withConf(
+    "spark.sql.optimizer.excludedRules", "graft.plans.PrefixFrameRewriteRule")(body)
 
   private def fixtureView(): Unit = {
     def s(l: Long) = Option(l) // us NULLABLE: the IS NOT NULL filter,
@@ -76,7 +76,7 @@ class PrefixFrameRewriteSpec extends AnyFunSuite {
     val (ref, refPlan) = without {
       val r = spark.sql(fixtureSql); (canon(r), plan(r))
     }
-    assert(refPlan.contains(sliding), refPlan) // kill switch works
+    assert(refPlan.contains(sliding), refPlan) // the rule is excluded
     assert(canon(q) == ref)
   }
 
@@ -161,10 +161,13 @@ class PrefixFrameRewriteSpec extends AnyFunSuite {
       .filter(col("t").isNotNull)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("k").orderBy("t").rangeBetween(-50L, 0L)
-    val q = df.select(col("k"), col("t"),
+    def q = df.select(col("k"), col("t"),
       count(lit(1)).over(w).as("n"),
       sum(col("x").cast("decimal(18,2)")).over(w).as("sx"))
-    assert(!plan(q).contains(sliding), plan(q))
-    assert(canon(q) == without(canon(q)))
+    val rewritten = q
+    assert(!plan(rewritten).contains(sliding), plan(rewritten))
+    val (ref, refPlan) = without { val r = q; (canon(r), plan(r)) }
+    assert(refPlan.contains(sliding), refPlan)
+    assert(canon(rewritten) == ref)
   }
 }
