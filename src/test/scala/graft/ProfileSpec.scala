@@ -60,9 +60,13 @@ class ProfileSpec extends AnyFunSuite {
 
   test("Measure.jobs counts the jobs a body starts on a Future on the " +
       "global execution context") {
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    // start a pool thread before the window, as a long-running JVM has one:
+    // a thread created inside it would inherit the caller's local
+    // properties, and with them any per-thread tag
+    Await.result(Future(()), 1.minute)
     val (rows, jobs) = Measure.jobs(spark) {
-      Await.result(Future(spark.range(0, 100, 1, 4).count())(
-        ExecutionContext.global), 1.minute)
+      Await.result(Future(spark.range(0, 100, 1, 4).count()), 1.minute)
     }
     assert(rows == 100)
     assert(jobs.nonEmpty && jobs.forall(j => j.seconds >= 0), jobs)
